@@ -203,21 +203,31 @@ def llm_classify(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         client = client_factory()  # once per task, not per row (R10)
-        bucket = TokenBucket(rate_per_sec) if rate_per_sec else None
+        limiter = TokenBucket(rate_per_sec) if rate_per_sec else None
+        spent: dict[int, int] = {}  # bucket -> rows classified so far
         for pdf in batches:
             labels = []
             for row in pdf.to_dict("records"):
+                if per_bucket_cap is not None:
+                    b = row["__bucket"]
+                    if spent.get(b, 0) >= per_bucket_cap:
+                        labels.append(NA)  # quota exhausted: pass-through
+                        continue
+                    spent[b] = spent.get(b, 0) + 1
                 prompt = format_prompt(prompt_template, row)
                 if prompt is None:
                     labels.append(None)
                     continue
-                if bucket is not None:
-                    bucket.acquire()
+                if limiter is not None:
+                    limiter.acquire()
                 try:
                     labels.append(client.classify(prompt))
                 except Exception:
                     labels.append(None)  # error → null (R12, etl.py:299-302)
-            pdf = pdf.copy()
+            if per_bucket_cap is not None:
+                pdf = pdf.drop(columns=["__bucket"])
+            else:
+                pdf = pdf.copy()
             pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
             yield pdf
 
@@ -246,33 +256,7 @@ def llm_classify(
             .sortWithinPartitions("__bucket", *order_cols)
         )
 
-        def run_capped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            client = client_factory()  # once per task (R10)
-            bucket = TokenBucket(rate_per_sec) if rate_per_sec else None
-            spent: dict[int, int] = {}  # bucket -> rows classified so far
-            for pdf in batches:
-                labels = []
-                for row in pdf.to_dict("records"):
-                    b = row["__bucket"]
-                    if spent.get(b, 0) >= per_bucket_cap:
-                        labels.append(NA)  # quota exhausted: pass-through
-                        continue
-                    spent[b] = spent.get(b, 0) + 1
-                    prompt = format_prompt(prompt_template, row)
-                    if prompt is None:
-                        labels.append(None)
-                        continue
-                    if bucket is not None:
-                        bucket.acquire()
-                    try:
-                        labels.append(client.classify(prompt))
-                    except Exception:
-                        labels.append(None)  # error → null (R12)
-                pdf = pdf.drop(columns=["__bucket"]).copy()
-                pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
-                yield pdf
-
-        classified = bucketed.mapInPandas(run_capped, schema=out_schema)
+        classified = bucketed.mapInPandas(run, schema=out_schema)
         classified = classified.withColumn(
             out_col, F.coalesce(F.col(out_col), F.lit(NA))
         )

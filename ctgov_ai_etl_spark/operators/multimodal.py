@@ -2,40 +2,57 @@
 (SURVEY.md §2.3 'multimodal columns'; NS mandate).
 
 Design: media travels as an opaque ``binary`` column plus a typed
-metadata struct; per-modality ops (decode, feature-extract, resize,
-frame-sample) are Arrow-batched ``mapInPandas`` stages so each task
-amortizes codec init and the bytes never round-trip through Python
-row objects.  "No keyed shuffle" throughout this module means: the
-codec path never hash-partitions (codec work has no key); the ONLY
-exchange is ``_spread``'s conditional round-robin repartition of a
-source scan narrower than the core count — a single-file-layout
-rescue that is a no-op at scale, where the file layout already
-provides the parallelism (see ``_spread``).  Four REAL image codecs back the seam in pure Python —
-netpbm (P5/P6) and 8-bit PNG with all five scanline filters
-(``functions/imagecodec.py``), baseline AND progressive JPEG with
-canonical Huffman, restart markers, successive approximation, and
-the 8x8 IDCT (``functions/jpegcodec.py``, rounds 10-11), and
-animated GIF with real LZW and interlacing
-(``functions/gifcodec.py``, round 11) — dispatched by magic bytes in
-``decode_image_real``; formats with no pure-Python decoder (H.264
-slice data, MP3 PCM, AVIF ...) still raise ``NotImplementedError``
-from the dispatcher, keeping the seam honest — but their METADATA
-layers are parsed for real since r14: MP3 frame headers + ID3v2
-(``functions/mp3meta.py``), H.264 Annex-B NAL walk + Exp-Golomb SPS
-(``functions/h264meta.py``), and WARC/1.0 record framing
-(``functions/warc.py``), each with a closed-form byte-layout oracle.
-``decode_image_features`` remains the sha-derived deterministic fake
-whose oracle needs no codec at all.
+metadata struct; every per-modality op (render, decode,
+feature-extract, resize, frame-sample, container walk) is one call to
+:func:`map_blobs`, the module's single Arrow-batched ``mapInPandas``
+seam.  It ships the package, selects the passthrough and input
+columns (optionally spreading a narrow source, see ``_spread``), runs
+a pure per-row function over each Arrow batch so each task amortizes
+codec init and the bytes never round-trip through Python row
+objects, and types the output from ONE ``(name, type)`` declaration —
+passthrough and id types come from the input schema.  Each public
+renderer or decoder is therefore a row of the per-format table: its
+docstring, its output-field declaration, and its per-row function.
+Renderers derive every fixture parameter from md5(text), and
+:func:`_render_blobs` hands that seed to their row functions;
+exploding walkers (frame sampling, tar / WARC / zip / WebDataset)
+return one tuple per output row, zero or more per input.
+
+"No keyed shuffle" throughout this module means: the codec path
+never hash-partitions (codec work has no key); the ONLY exchange is
+``_spread``'s conditional round-robin repartition of a source scan
+narrower than the core count — a single-file-layout rescue that is a
+no-op at scale, where the file layout already provides the
+parallelism (see ``_spread``).  Four REAL image codecs back the seam
+in pure Python — netpbm (P5/P6) and 8-bit PNG with all five scanline
+filters (``functions/imagecodec.py``), baseline AND progressive JPEG
+with canonical Huffman, restart markers, successive approximation,
+and the 8x8 IDCT (``functions/jpegcodec.py``), and animated GIF with
+real LZW and interlacing (``functions/gifcodec.py``) — dispatched by
+magic bytes in ``decode_image_real``; formats with no pure-Python
+decoder (H.264 slice data, MP3 PCM, AVIF ...) still raise
+``NotImplementedError`` from the dispatcher, keeping the seam honest
+— but their METADATA layers are parsed for real: MP3 frame headers +
+ID3v2 (``functions/mp3meta.py``), H.264 Annex-B NAL walk +
+Exp-Golomb SPS (``functions/h264meta.py``), and WARC/1.0 record
+framing (``functions/warc.py``), each with a closed-form byte-layout
+oracle.  ``decode_image_features`` remains the sha-derived
+deterministic fake whose oracle needs no codec at all.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math as _math
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_BLOB = (("blob", "binary"),)
 
 
 def _spread(src: DataFrame) -> DataFrame:
@@ -66,6 +83,113 @@ def _spread(src: DataFrame) -> DataFrame:
     return spread_to_parallelism(src)
 
 
+def map_blobs(
+    df: DataFrame,
+    in_cols: Sequence[str],
+    row_fn: Callable[..., Any],
+    out_fields: Sequence[tuple[str, str]],
+    *,
+    keep: Sequence[str] = (),
+    explode: bool = False,
+    spread: bool = False,
+) -> DataFrame:
+    """Run ``row_fn`` over every row of ``df`` in ONE Arrow-batched
+    ``mapInPandas`` stage.
+
+    ``row_fn`` receives the row's ``in_cols`` values (blobs as
+    ``bytes``) and returns one tuple matching ``out_fields`` — or, with
+    ``explode``, an iterable of such tuples (zero or more output rows
+    per input row, produced inside the task so a long stream never
+    materializes as one row).  Each output row starts with the
+    ``keep`` columns of its input row, typed as in ``df.schema``,
+    followed by ``out_fields`` as ``(name, Spark SQL type)``.
+    ``spread`` applies :func:`_spread` to the selected source first;
+    it is the caller's measured choice, never a per-format default."""
+    from ctgov_ai_etl_spark.session import ship_package
+
+    ship_package(df.sparkSession)
+    keep, in_cols = list(keep), list(in_cols)
+    src = df.select(*dict.fromkeys(keep + in_cols))
+    if spread:  # caller measured heavy per-row Python; see _spread
+        src = _spread(src)
+    schema = ", ".join(
+        [f"`{c}` {src.schema[c].dataType.simpleString()}" for c in keep]
+        + [f"`{name}` {typ}" for name, typ in out_fields]
+    )
+    names = [name for name, _ in out_fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = zip(*(pdf[c] for c in in_cols))
+            if explode:
+                src_pos, out = [], []
+                for i, args in enumerate(rows):
+                    for tup in row_fn(*args):
+                        src_pos.append(i)
+                        out.append(tup)
+                res = pdf[keep].iloc[src_pos].reset_index(drop=True)
+            else:
+                out = [row_fn(*args) for args in rows]
+                res = pdf[keep].copy()
+            cols = list(zip(*out)) if out else [()] * len(names)
+            for name, col in zip(names, cols):
+                res[name] = list(col)
+            yield res
+
+    return src.mapInPandas(run, schema=schema)
+
+
+def _render_blobs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    row_fn: Callable[[Any, str, bytes], tuple],
+    out_fields: Sequence[tuple[str, str]],
+    spread: bool,
+) -> DataFrame:
+    """:func:`map_blobs` for the fixture renderers: ``row_fn(rid, text,
+    dig)`` gets the row id, the text as ``str`` and its md5 digest —
+    the seed every fixture derives from, so a SQL oracle replays it
+    with ``md5(text)``."""
+
+    def seeded(rid: Any, text: Any) -> tuple:
+        t = str(text)
+        return row_fn(rid, t, hashlib.md5(t.encode("utf-8")).digest())
+
+    return map_blobs(
+        df, [id_col, text_col], seeded, out_fields, keep=[id_col], spread=spread
+    )
+
+
+def _meta_row(
+    parse: Callable[[bytes], dict], out_fields: Sequence[tuple[str, str]]
+) -> Callable[[bytes], tuple]:
+    """Per-row function for a parser returning one dict per payload:
+    the declared fields, in declaration order."""
+    names = [name for name, _ in out_fields]
+
+    def row(data: bytes) -> tuple:
+        meta = parse(bytes(data))
+        return tuple(meta[n] for n in names)
+
+    return row
+
+
+def _walk_rows(
+    parse: Callable[[bytes], list[dict]], out_fields: Sequence[tuple[str, str]]
+) -> Callable[[bytes], Iterator[tuple]]:
+    """Exploding twin of :func:`_meta_row` for container walks: one
+    output row per parsed record, its ordinal first (the first
+    declared field), then the record's declared fields."""
+    names = [name for name, _ in out_fields[1:]]
+
+    def row(data: bytes) -> Iterator[tuple]:
+        for j, rec in enumerate(parse(bytes(data))):
+            yield (j, *(rec[n] for n in names))
+
+    return row
+
+
 def attach_blob(df: DataFrame, src_col: str, blob_col: str = "blob") -> DataFrame:
     """Real plumbing: pack a column into binary + typed metadata
     (mime, byte size, checksum) — the storage shape for media at
@@ -91,41 +215,21 @@ def render_test_images(
     PNG whose scanline filters cycle through all five types — a wrong
     Sub/Up/Average/Paeth predictor in the decoder corrupts the raster
     and fails the oracle.  Raster byte j = (v + j) % 256."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.imagecodec import encode_png, encode_ppm
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
+        if int(rid) % 2 == 0:
+            raster = bytes((v + j) % 256 for j in range(w * h * 3))
+            return "ppm", encode_ppm(w, h, raster)
+        raster = bytes((v + j) % 256 for j in range(w * h))
+        blob = encode_png(
+            w, h, raster, color_type=0, filter_per_row=lambda y: y % 5
+        )
+        return "png", blob
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fmts, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
-                if int(rid) % 2 == 0:
-                    raster = bytes((v + j) % 256 for j in range(w * h * 3))
-                    blob, fmt = encode_ppm(w, h, raster), "ppm"
-                else:
-                    raster = bytes((v + j) % 256 for j in range(w * h))
-                    blob, fmt = (
-                        encode_png(
-                            w, h, raster, color_type=0,
-                            filter_per_row=lambda y: y % 5,
-                        ),
-                        "png",
-                    )
-                ids.append(rid)
-                fmts.append(fmt)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "fmt": fmts, "blob": blobs})
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, fmt string, blob binary"
+    return _render_blobs(
+        df, id_col, text_col, row, [("fmt", "string"), *_BLOB], spread
     )
 
 
@@ -134,6 +238,34 @@ def render_test_images(
 PNG_MATRIX_PALETTE = [
     ((i * 7) % 256, (i * 13) % 256, (i * 29) % 256) for i in range(16)
 ]
+
+
+def _png_grey4(w: int, h: int, v: int) -> bytes:
+    """4-bit greyscale PNG, hand-packed MSB-first nibbles with per-row
+    byte padding (the PNG encoder writes 8/16-bit depths only)."""
+    import struct
+    import zlib
+
+    from ctgov_ai_etl_spark.functions.imagecodec import _PNG_SIG, _chunk
+
+    rows = bytearray()
+    for y in range(h):
+        rows.append(0)  # filter None
+        acc, nb = 0, 0
+        for x in range(w):
+            acc = (acc << 4) | ((v + y * w + x) % 16)
+            nb += 4
+            if nb == 8:
+                rows.append(acc)
+                acc, nb = 0, 0
+        if nb:
+            rows.append(acc << 4)
+    ihdr = struct.pack(">IIBBBBB", w, h, 4, 0, 0, 0, 0)
+    return (
+        _PNG_SIG + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", zlib.compress(bytes(rows)))
+        + _chunk(b"IEND", b"")
+    )
 
 
 def render_png_matrix(
@@ -154,92 +286,60 @@ def render_png_matrix(
     target) and a different series in the low byte so a decoder that
     read the wrong byte fails the oracle; alpha bytes likewise differ
     from the grey series so a decoder that averaged alpha in fails."""
-    import hashlib as _hl
-    import struct as _st
-    import zlib as _zl
+    from ctgov_ai_etl_spark.functions.imagecodec import encode_png
 
-    from ctgov_ai_etl_spark.functions.imagecodec import (
-        _PNG_SIG,
-        _chunk,
-        encode_png,
-    )
-    from ctgov_ai_etl_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
     pal = PNG_MATRIX_PALETTE
 
-    def _grey4(w: int, h: int, v: int) -> bytes:
-        rows = bytearray()
-        for y in range(h):
-            rows.append(0)  # filter None
-            acc, nb = 0, 0
-            for x in range(w):
-                acc = (acc << 4) | ((v + y * w + x) % 16)
-                nb += 4
-                if nb == 8:
-                    rows.append(acc)
-                    acc, nb = 0, 0
-            if nb:
-                rows.append(acc << 4)
-        ihdr = _st.pack(">IIBBBBB", w, h, 4, 0, 0, 0, 0)
-        return (
-            _PNG_SIG + _chunk(b"IHDR", ihdr)
-            + _chunk(b"IDAT", _zl.compress(bytes(rows)))
-            + _chunk(b"IEND", b"")
-        )
+    def cyc(y: int) -> int:
+        return y % 5
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, variants, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
-                variant = int(rid) % 6
-                cyc = lambda y: y % 5  # noqa: E731
-                if variant in (0, 4):
-                    idx = bytes((v + j) % 16 for j in range(w * h))
-                    blob = encode_png(
-                        w, h, idx, palette=pal,
-                        interlace=(variant == 0), filter_per_row=cyc,
-                    )
-                elif variant == 1:
-                    raw = b"".join(
-                        bytes(((v + j) % 256, (v + 5 * j) % 256))
-                        for j in range(w * h)
-                    )
-                    blob = encode_png(
-                        w, h, raw, 0, bit_depth=16, filter_per_row=cyc
-                    )
-                elif variant == 2:
-                    raw = b"".join(
-                        bytes(((v + j) % 256, (v + 5 * j) % 256))
-                        for j in range(w * h * 3)
-                    )
-                    blob = encode_png(
-                        w, h, raw, 2, bit_depth=16, interlace=True,
-                        filter_per_row=cyc,
-                    )
-                elif variant == 3:
-                    raw = b"".join(
-                        bytes(((v + j) % 256, (v + 3 * j + 1) % 256))
-                        for j in range(w * h)
-                    )
-                    blob = encode_png(w, h, raw, 4, filter_per_row=cyc)
-                else:
-                    blob = _grey4(w, h, v)
-                ids.append(rid)
-                variants.append(variant)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {id_col: ids, "variant": variants, "blob": blobs}
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
+        variant = int(rid) % 6
+        if variant in (0, 4):
+            idx = bytes((v + j) % 16 for j in range(w * h))
+            blob = encode_png(
+                w, h, idx, palette=pal,
+                interlace=(variant == 0), filter_per_row=cyc,
             )
+        elif variant == 1:
+            raw = b"".join(
+                bytes(((v + j) % 256, (v + 5 * j) % 256))
+                for j in range(w * h)
+            )
+            blob = encode_png(w, h, raw, 0, bit_depth=16, filter_per_row=cyc)
+        elif variant == 2:
+            raw = b"".join(
+                bytes(((v + j) % 256, (v + 5 * j) % 256))
+                for j in range(w * h * 3)
+            )
+            blob = encode_png(
+                w, h, raw, 2, bit_depth=16, interlace=True,
+                filter_per_row=cyc,
+            )
+        elif variant == 3:
+            raw = b"".join(
+                bytes(((v + j) % 256, (v + 3 * j + 1) % 256))
+                for j in range(w * h)
+            )
+            blob = encode_png(w, h, raw, 4, filter_per_row=cyc)
+        else:
+            blob = _png_grey4(w, h, v)
+        return variant, blob
 
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, variant int, blob binary"
+    return _render_blobs(
+        df, id_col, text_col, row, [("variant", "int"), *_BLOB], spread
     )
+
+
+def _block_raster(w8: int, h8: int, v: int, step: int) -> bytes:
+    """Greyscale raster of w8 x h8 constant 8x8 blocks, block b =
+    (v + step*b) % 256 — DC-only under a flat quantization table."""
+    arr = np.zeros((h8 * 8, w8 * 8), dtype=np.uint8)
+    for b in range(w8 * h8):
+        by, bx = divmod(b, w8)
+        arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (v + step * b) % 256
+    return arr.tobytes()
 
 
 def render_test_jpegs(
@@ -260,51 +360,22 @@ def render_test_jpegs(
     ids — a restart marker after every MCU (predictor resets make the
     differentials restart too; a decoder that missed the reset would
     corrupt every post-RST block)."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.jpegcodec import encode_jpeg_baseline
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w8, h8, v = 1 + dig[0] % 4, 1 + dig[1] % 4, dig[2]
+        # abs() so odd-ness matches the oracle's `doc_id % 2 <> 0`
+        # under DuckDB's sign-following modulo (ADVICE r10: -3 % 2 is
+        # 1 in Python, -1 in DuckDB — both sides must agree on
+        # negative ids)
+        rst = 1 if abs(int(rid)) % 2 else 0
+        raster = _block_raster(w8, h8, v, 17)
+        return rst, encode_jpeg_baseline(
+            w8 * 8, h8 * 8, raster, restart_interval=rst
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, rsts, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w8, h8, v = 1 + dig[0] % 4, 1 + dig[1] % 4, dig[2]
-                arr = np.zeros((h8 * 8, w8 * 8), dtype=np.uint8)
-                for b in range(w8 * h8):
-                    by, bx = divmod(b, w8)
-                    arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                        v + 17 * b
-                    ) % 256
-                # abs() so odd-ness matches the oracle's
-                # `doc_id % 2 <> 0` under DuckDB's sign-following
-                # modulo (ADVICE r10: -3 % 2 is 1 in Python, -1 in
-                # DuckDB — both sides must agree on negative ids)
-                rst = 1 if abs(int(rid)) % 2 else 0
-                blobs.append(
-                    encode_jpeg_baseline(
-                        w8 * 8,
-                        h8 * 8,
-                        arr.tobytes(),
-                        restart_interval=rst,
-                    )
-                )
-                ids.append(rid)
-                rsts.append(rst)
-            yield pd.DataFrame(
-                {id_col: ids, "rst": rsts, "blob": blobs}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, rst int, blob binary"
+    return _render_blobs(
+        df, id_col, text_col, row, [("rst", "int"), *_BLOB], spread
     )
 
 
@@ -322,51 +393,22 @@ def render_test_jpegs_progressive(
     (runs span the whole image), and ids with abs(id) % 3 == 1 add a
     restart marker per unit, resetting predictors and EOB runs
     inside every scan."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.jpegcodec import (
         encode_jpeg_progressive,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w8, h8, v = 1 + dig[3] % 4, 1 + dig[4] % 4, dig[5]
+        # abs() keeps the parity rule aligned with DuckDB's
+        # sign-following modulo on negative ids
+        rst = 1 if abs(int(rid)) % 3 == 1 else 0
+        raster = _block_raster(w8, h8, v, 23)
+        return rst, encode_jpeg_progressive(
+            w8 * 8, h8 * 8, raster, restart_interval=rst
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, rsts, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w8, h8, v = 1 + dig[3] % 4, 1 + dig[4] % 4, dig[5]
-                arr = np.zeros((h8 * 8, w8 * 8), dtype=np.uint8)
-                for b in range(w8 * h8):
-                    by, bx = divmod(b, w8)
-                    arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                        v + 23 * b
-                    ) % 256
-                # abs() keeps the parity rule aligned with DuckDB's
-                # sign-following modulo on negative ids
-                rst = 1 if abs(int(rid)) % 3 == 1 else 0
-                blobs.append(
-                    encode_jpeg_progressive(
-                        w8 * 8,
-                        h8 * 8,
-                        arr.tobytes(),
-                        restart_interval=rst,
-                    )
-                )
-                ids.append(rid)
-                rsts.append(rst)
-            yield pd.DataFrame(
-                {id_col: ids, "rst": rsts, "blob": blobs}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, rst int, blob binary"
+    return _render_blobs(
+        df, id_col, text_col, row, [("rst", "int"), *_BLOB], spread
     )
 
 
@@ -390,55 +432,34 @@ def decode_image_real(
         decode_ppm,
     )
     from ctgov_ai_etl_spark.functions.jpegcodec import decode_jpeg
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    keep = [c for c in df.columns if c != blob_col]
-    src = df.select(*keep, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, sums, ns = [], [], [], []
-            for data in pdf[blob_col]:
-                b = bytes(data)
-                if b[:8] == b"\x89PNG\r\n\x1a\n":
-                    w, h, s, n = decode_png(b)
-                elif b[:2] in (b"P5", b"P6"):
-                    w, h, s, n = decode_ppm(b)
-                elif b[:3] == b"\xff\xd8\xff":
-                    w, h, s, n = decode_jpeg(b)
-                elif b[:4] == b"GIF8":
-                    w, h, s, n = decode_gif(b)
-                elif b[:2] == b"BM":
-                    w, h, s, n = decode_bmp(b)
-                else:
-                    raise NotImplementedError(
-                        "no pure-Python codec for this payload — "
-                        "install an image library on the executors "
-                        "and extend the dispatch"
-                    )
-                ws.append(w)
-                hs.append(h)
-                sums.append(s)
-                ns.append(n)
-            out = pdf[keep].copy()
-            out["width"] = ws
-            out["height"] = hs
-            out["luma_sum"] = sums
-            out["n_samples"] = ns
-            yield out
-
-    keep_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name != blob_col
+    codecs = (
+        (b"\x89PNG\r\n\x1a\n", decode_png),
+        (b"P5", decode_ppm),
+        (b"P6", decode_ppm),
+        (b"\xff\xd8\xff", decode_jpeg),
+        (b"GIF8", decode_gif),
+        (b"BM", decode_bmp),
     )
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{keep_schema}, width int, height int, "
-            "luma_sum long, n_samples long"
-        ),
+
+    def row(data: bytes) -> tuple:
+        b = bytes(data)
+        for magic, decode in codecs:
+            if b.startswith(magic):
+                return decode(b)
+        raise NotImplementedError(
+            "no pure-Python codec for this payload — "
+            "install an image library on the executors "
+            "and extend the dispatch"
+        )
+
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("width", "int"), ("height", "int"), ("luma_sum", "long"),
+         ("n_samples", "long")],
+        keep=[c for c in df.columns if c != blob_col],
     )
 
 
@@ -462,25 +483,13 @@ def decode_image_features(
     iterator form initializes the (stub) codec once per task and
     processes Arrow record batches — the exact layout a real decoder
     needs."""
-    from ctgov_ai_etl_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _fake_decode  # codec init happens here, once per task
-        for pdf in batches:
-            feats = [decode(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_luma": [f[2] for f in feats],
-                }
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, width int, height int, mean_luma double")
+    return map_blobs(
+        df,
+        [blob_col],
+        _fake_decode,
+        [("width", "int"), ("height", "int"), ("mean_luma", "double")],
+        keep=[id_col],
+    )
 
 
 def frame_sample(
@@ -490,26 +499,20 @@ def frame_sample(
     (here: deterministic fake frames keyed by byte offsets). Output
     explodes inside mapInPandas so a 2-hour video never materializes
     as one row in memory."""
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> Iterator[tuple]:
+        for i in range(max(1, len(data) // every_n)):
+            chunk = bytes(data[i * every_n : (i + 1) * every_n])
+            yield i, hashlib.sha256(chunk).hexdigest()[:16]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_hash = [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                n = max(1, len(data) // every_n)
-                for i in range(n):
-                    chunk = bytes(data[i * every_n : (i + 1) * every_n])
-                    out_ids.append(rid)
-                    out_idx.append(i)
-                    out_hash.append(hashlib.sha256(chunk).hexdigest()[:16])
-            yield pd.DataFrame(
-                {id_col: out_ids, "frame_idx": out_idx, "frame_sig": out_hash}
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, frame_idx int, frame_sig string")
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("frame_idx", "int"), ("frame_sig", "string")],
+        keep=[id_col],
+        explode=True,
+    )
 
 
 def render_test_audio(
@@ -523,33 +526,18 @@ def render_test_audio(
     ((v·131 + j·7919) mod 65536) − 32768 — full int16 range,
     byte-order sensitive (a wrong endianness or chunk walk corrupts
     the decoded sum)."""
-    import hashlib as _hl
-    import struct as _st
+    import struct
 
     from ctgov_ai_etl_spark.functions.imagecodec import encode_wav
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        ch = 1 + dig[0] % 2
+        n = (50 + dig[1]) * ch
+        v = dig[2]
+        vals = [((v * 131 + j * 7919) % 65536) - 32768 for j in range(n)]
+        return (encode_wav(8000, ch, struct.pack(f"<{n}h", *vals)),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                ch = 1 + dig[0] % 2
-                n_frames = 50 + dig[1]
-                v = dig[2]
-                n = n_frames * ch
-                vals = [((v * 131 + j * 7919) % 65536) - 32768 for j in range(n)]
-                blob = encode_wav(8000, ch, _st.pack(f"<{n}h", *vals))
-                ids.append(rid)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def decode_audio_real(
@@ -561,36 +549,14 @@ def decode_audio_real(
     fixed-order division downstream — hash-checkable end to end
     (mm_decode_audio)."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            chs, rates, frames, sums = [], [], [], []
-            for data in pdf[blob_col]:
-                ch, rate, nf, s = decode_wav(bytes(data))
-                chs.append(ch)
-                rates.append(rate)
-                frames.append(nf)
-                sums.append(s)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "channels": chs,
-                    "sample_rate": rates,
-                    "n_frames": frames,
-                    "abs_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, channels int, sample_rate int,"
-            " n_frames int, abs_sum long"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        lambda data: decode_wav(bytes(data)),
+        [("channels", "int"), ("sample_rate", "int"), ("n_frames", "int"),
+         ("abs_sum", "long")],
+        keep=[id_col],
     )
 
 
@@ -606,44 +572,25 @@ def audio_features_real(
     replays.  One Arrow-batched mapInPandas stage, one output row
     per (clip, channel), no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav_samples
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> Iterator[tuple]:
+        ch, _rate, samples = decode_wav_samples(bytes(data))
+        arr = np.asarray(samples, dtype=np.int64)
+        nf = len(arr) // ch
+        for c in range(ch):
+            sc = arr[c::ch]
+            nonneg = sc >= 0
+            zcr = int(np.sum(nonneg[1:] != nonneg[:-1]))
+            yield c, nf, zcr, int(np.sum(sc * sc))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, chans, frames, zcrs, sqs = [], [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                ch, _rate, samples = decode_wav_samples(bytes(data))
-                arr = np.asarray(samples, dtype=np.int64)
-                nf = len(arr) // ch
-                for c in range(ch):
-                    sc = arr[c::ch]
-                    nonneg = sc >= 0
-                    ids.append(rid)
-                    chans.append(c)
-                    frames.append(nf)
-                    zcrs.append(int(np.sum(nonneg[1:] != nonneg[:-1])))
-                    sqs.append(int(np.sum(sc * sc)))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channel": chans,
-                    "n_frames": frames,
-                    "zcr": zcrs,
-                    "sq_sum": sqs,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, channel int, n_frames int,"
-            " zcr long, sq_sum long"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("channel", "int"), ("n_frames", "int"), ("zcr", "long"),
+         ("sq_sum", "long")],
+        keep=[id_col],
+        explode=True,
     )
 
 
@@ -655,34 +602,18 @@ def render_test_video(
     even dimensions, frame count, and luma pattern derive from
     md5(text).  Y byte at (frame f, index j) = (v + f·17 + j) % 256 —
     a closed form a SQL oracle replays without touching bytes."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.imagecodec import encode_y4m
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w, h = 2 * (1 + dig[0] % 8), 2 * (1 + dig[1] % 8)
+        nf, v = 1 + dig[3] % 6, dig[2]
+        frames = [
+            bytes((v + f * 17 + j) % 256 for j in range(w * h))
+            for f in range(nf)
+        ]
+        return (encode_y4m(w, h, frames),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w = 2 * (1 + dig[0] % 8)
-                h = 2 * (1 + dig[1] % 8)
-                nf = 1 + dig[3] % 6
-                v = dig[2]
-                frames = [
-                    bytes((v + f * 17 + j) % 256 for j in range(w * h))
-                    for f in range(nf)
-                ]
-                ids.append(rid)
-                blobs.append(encode_y4m(w, h, frames))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def decode_video_real(
@@ -694,36 +625,14 @@ def decode_video_real(
     n_frames) — the per-stream loudness/brightness statistic a SQL
     oracle replays (mm_decode_video)."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_y4m
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, nfs, sums = [], [], [], []
-            for data in pdf[blob_col]:
-                w, h, nf, s = decode_y4m(bytes(data))
-                ws.append(w)
-                hs.append(h)
-                nfs.append(nf)
-                sums.append(s)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "n_frames": nfs,
-                    "luma_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, width int, height int,"
-            " n_frames int, luma_sum long"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        lambda data: decode_y4m(bytes(data)),
+        [("width", "int"), ("height", "int"), ("n_frames", "int"),
+         ("luma_sum", "long")],
+        keep=[id_col],
     )
 
 
@@ -742,40 +651,19 @@ def resize_image_real(
         decode_image_pixels,
         resize_nearest,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    keep = [c for c in df.columns if c != blob_col]
-    src = df.select(*keep, blob_col)
+    def row(data: bytes) -> tuple:
+        w, h, ch, raster = decode_image_pixels(bytes(data))
+        wo, ho, out = resize_nearest(w, h, ch, raster, factor)
+        return wo, ho, sum(out), len(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wos, hos, sums, ns = [], [], [], []
-            for data in pdf[blob_col]:
-                w, h, ch, raster = decode_image_pixels(bytes(data))
-                wo, ho, out = resize_nearest(w, h, ch, raster, factor)
-                wos.append(wo)
-                hos.append(ho)
-                sums.append(sum(out))
-                ns.append(len(out))
-            res = pdf[keep].copy()
-            res["width_out"] = wos
-            res["height_out"] = hos
-            res["luma_sum"] = sums
-            res["n_samples"] = ns
-            yield res
-
-    keep_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name != blob_col
-    )
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{keep_schema}, width_out int, height_out int, "
-            "luma_sum long, n_samples long"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("width_out", "int"), ("height_out", "int"), ("luma_sum", "long"),
+         ("n_samples", "long")],
+        keep=[c for c in df.columns if c != blob_col],
     )
 
 
@@ -789,38 +677,20 @@ def sample_video_frames_real(
     task, so a multi-GB stream never materializes as a single row.
     One Arrow-batched ``mapInPandas`` stage, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_y4m_frames
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> Iterator[tuple]:
+        w, h, frames = decode_y4m_frames(bytes(data))
+        for i in range(0, len(frames), every_n):
+            yield i, w, h, frames[i]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, sums = [], [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                w, h, frames = decode_y4m_frames(bytes(data))
-                for i in range(0, len(frames), every_n):
-                    ids.append(rid)
-                    idxs.append(i)
-                    ws.append(w)
-                    hs.append(h)
-                    sums.append(frames[i])
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": idxs,
-                    "width": ws,
-                    "height": hs,
-                    "luma_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, frame_idx int, width int, height int, "
-            "luma_sum long"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("frame_idx", "int"), ("width", "int"), ("height", "int"),
+         ("luma_sum", "long")],
+        keep=[id_col],
+        explode=True,
     )
 
 
@@ -834,46 +704,25 @@ def downsample_audio_real(
     sample rate — the audio leg of the resize/frame-sample kernel
     family.  One Arrow-batched ``mapInPandas`` stage, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav_samples
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> tuple:
+        ch, rate, vals = decode_wav_samples(bytes(data))
+        abs_sum = kept = 0
+        for f in range(0, len(vals) // ch, every_n):
+            base = f * ch
+            for c in range(ch):
+                v = vals[base + c]
+                abs_sum += v if v >= 0 else -v
+            kept += 1
+        return ch, rate // every_n, kept, abs_sum
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chs, rates, nfs, sums = [], [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                ch, rate, vals = decode_wav_samples(bytes(data))
-                n_frames = len(vals) // ch
-                abs_sum = 0
-                kept = 0
-                for f in range(0, n_frames, every_n):
-                    base = f * ch
-                    for c in range(ch):
-                        v = vals[base + c]
-                        abs_sum += v if v >= 0 else -v
-                    kept += 1
-                ids.append(rid)
-                chs.append(ch)
-                rates.append(rate // every_n)
-                nfs.append(kept)
-                sums.append(abs_sum)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channels": chs,
-                    "sample_rate_out": rates,
-                    "n_frames_out": nfs,
-                    "abs_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, channels int, sample_rate_out int, "
-            "n_frames_out int, abs_sum long"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("channels", "int"), ("sample_rate_out", "int"),
+         ("n_frames_out", "int"), ("abs_sum", "long")],
+        keep=[id_col],
     )
 
 
@@ -891,26 +740,13 @@ def dhash_images_real(
         decode_image_pixels,
         dhash_bits,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                w, h, ch, raster = decode_image_pixels(bytes(data))
-                hi, lo = dhash_bits(w, h, ch, raster)
-                ids.append(rid)
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {id_col: ids, "hash_hi": his, "hash_lo": los}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, hash_hi long, hash_lo long"
+    return map_blobs(
+        df,
+        [blob_col],
+        lambda data: dhash_bits(*decode_image_pixels(bytes(data))),
+        [("hash_hi", "long"), ("hash_lo", "long")],
+        keep=[id_col],
     )
 
 
@@ -932,67 +768,32 @@ def render_and_decode_test_gifs(
     + frame-walk path end to end).  Emits exact integers so the
     closed-form SQL oracle replays the palette sums without touching
     bytes.  One Arrow-batched mapInPandas stage, no keyed shuffle."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.gifcodec import (
         decode_gif_frames,
         encode_gif,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w, h = 1 + dig[6] % 24, 1 + dig[7] % 24
+        v, nf = dig[8], 1 + dig[9] % 3
+        pal = [((v + 13 * c) % 256,) * 3 for c in range(16)]
+        frames = [
+            bytes((j + f) % 16 for j in range(w * h)) for f in range(nf)
+        ]
+        blob = encode_gif(
+            w, h, frames, pal,
+            interlace=bool(abs(int(rid)) % 2),
+            delay_cs=5 if nf > 1 else None,
+        )
+        W, H, dec = decode_gif_frames(blob)
+        return W, H, len(dec), sum(dec[0]), sum(dec[-1]), W * H * 3
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, nfs, s0, sl, ns = [], [], [], [], [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w = 1 + dig[6] % 24
-                h = 1 + dig[7] % 24
-                v = dig[8]
-                nf = 1 + dig[9] % 3
-                pal = [((v + 13 * c) % 256,) * 3 for c in range(16)]
-                frames = [
-                    bytes((j + f) % 16 for j in range(w * h))
-                    for f in range(nf)
-                ]
-                blob = encode_gif(
-                    w,
-                    h,
-                    frames,
-                    pal,
-                    interlace=bool(abs(int(rid)) % 2),
-                    delay_cs=5 if nf > 1 else None,
-                )
-                W, H, dec = decode_gif_frames(blob)
-                ids.append(rid)
-                ws.append(W)
-                hs.append(H)
-                nfs.append(len(dec))
-                s0.append(sum(dec[0]))
-                sl.append(sum(dec[-1]))
-                ns.append(W * H * 3)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "width": pd.array(ws, dtype="int32"),
-                    "height": pd.array(hs, dtype="int32"),
-                    "n_frames": pd.array(nfs, dtype="int32"),
-                    "luma0_sum": pd.array(s0, dtype="int64"),
-                    "luma_last_sum": pd.array(sl, dtype="int64"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, width int, height int, n_frames int, "
-            "luma0_sum long, luma_last_sum long, n_samples long"
-        ),
+    return _render_blobs(
+        df, id_col, text_col, row,
+        [("width", "int"), ("height", "int"), ("n_frames", "int"),
+         ("luma0_sum", "long"), ("luma_last_sum", "long"),
+         ("n_samples", "long")],
+        spread,
     )
 
 
@@ -1007,28 +808,14 @@ def render_test_bmps(
     (for the padding) shift the sum.  One Arrow-batched mapInPandas
     stage; decode flows through the magic-byte dispatcher like every
     other format."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.imagecodec import encode_bmp
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        w, h, v = 1 + dig[10] % 16, 1 + dig[11] % 16, dig[12]
+        raster = bytes((v + 7 * j) % 256 for j in range(w * h * 3))
+        return (encode_bmp(w, h, raster),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w, h, v = 1 + dig[10] % 16, 1 + dig[11] % 16, dig[12]
-                raster = bytes((v + 7 * j) % 256 for j in range(w * h * 3))
-                ids.append(rid)
-                blobs.append(encode_bmp(w, h, raster))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 # 8-point DFT coefficient tables in MILLI units: round(cos/−sin of
@@ -1036,8 +823,6 @@ def render_test_bmps(
 # AND the SQL oracle's literal lists both derive from these, so the
 # two sides cannot drift.  Milli (not micro) keeps the bin energy
 # re² + im² under int64 at full int16 amplitude (|re| ≤ 8·32768·1000).
-import math as _math
-
 DFT8_COS = [
     [round(_math.cos(2 * _math.pi * m * k / 8) * 1000) for k in range(8)]
     for m in range(5)
@@ -1060,48 +845,33 @@ def audio_dft8_real(
     the clip and averages per bin — same algebra, same exactness.)
     One Arrow-batched mapInPandas stage, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav_samples
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    cos = np.asarray(DFT8_COS, dtype=np.int64)
+    sin = np.asarray(DFT8_SIN, dtype=np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(data: bytes) -> Iterator[tuple]:
+        ch, _rate, samples = decode_wav_samples(bytes(data))
+        arr = np.asarray(samples, dtype=np.int64)
+        for c in range(ch):
+            x = arr[c::ch][:8]
+            if x.size < 8:
+                # zero-pad short clips: the DFT of a zero-padded frame
+                # is well-defined, and the fixed (5,8) table would
+                # otherwise raise a shape mismatch in the executor
+                # (ADVICE r12)
+                x = np.pad(x, (0, 8 - x.size))
+            re, im = cos @ x, sin @ x
+            e = re * re + im * im
+            for m in range(5):
+                yield c, m, int(e[m])
 
-        cos = np.asarray(DFT8_COS, dtype=np.int64)
-        sin = np.asarray(DFT8_SIN, dtype=np.int64)
-        for pdf in batches:
-            ids, chans, bins, energies = [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                ch, _rate, samples = decode_wav_samples(bytes(data))
-                arr = np.asarray(samples, dtype=np.int64)
-                for c in range(ch):
-                    x = arr[c::ch][:8]
-                    if x.size < 8:
-                        # zero-pad short clips: the DFT of a
-                        # zero-padded frame is well-defined, and the
-                        # fixed (5,8) table would otherwise raise a
-                        # shape mismatch in the executor (ADVICE r12)
-                        x = np.pad(x, (0, 8 - x.size))
-                    re = cos @ x
-                    im = sin @ x
-                    e = re * re + im * im
-                    for m in range(5):
-                        ids.append(rid)
-                        chans.append(c)
-                        bins.append(m)
-                        energies.append(int(e[m]))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channel": chans,
-                    "bin": bins,
-                    "energy": energies,
-                }
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, channel int, bin int, energy long"
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("channel", "int"), ("bin", "int"), ("energy", "long")],
+        keep=[id_col],
+        explode=True,
     )
 
 
@@ -1115,43 +885,27 @@ def render_test_mp3(
     form): bitrate index 1+d0%14, sample-rate index d1%3, frame count
     5+d2%20, padding seed d3 (frame j padded iff (d3+j)%2==1), ID3v2
     present iff d4%2==0 with a d5-byte opaque payload."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.mp3meta import encode_mp3_cbr
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        id3 = (
+            ((17 * np.arange(dig[5], dtype=np.int64)) % 256)
+            .astype(np.uint8)
+            .tobytes()
+            if dig[4] % 2 == 0
+            else None
+        )
+        return (
+            encode_mp3_cbr(
+                bitrate_index=1 + dig[0] % 14,
+                sample_rate_index=dig[1] % 3,
+                n_frames=5 + dig[2] % 20,
+                pad_seed=dig[3],
+                id3_payload=id3,
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                id3 = (
-                    ((17 * np.arange(dig[5], dtype=np.int64)) % 256)
-                    .astype(np.uint8)
-                    .tobytes()
-                    if dig[4] % 2 == 0
-                    else None
-                )
-                blobs.append(
-                    encode_mp3_cbr(
-                        bitrate_index=1 + dig[0] % 14,
-                        sample_rate_index=dig[1] % 3,
-                        n_frames=5 + dig[2] % 20,
-                        pad_seed=dig[3],
-                        id3_payload=id3,
-                    )
-                )
-                ids.append(rid)
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def mp3_meta_real(
@@ -1163,41 +917,32 @@ def mp3_meta_real(
     the closed-form oracle hash-checks the whole walk — frame-length
     math, padding bits, envelope skip — end to end.  Zero shuffle."""
     from ctgov_ai_etl_spark.functions.mp3meta import parse_mp3_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    id_col,
-                    "id3_bytes",
-                    "n_frames",
-                    "bitrate_kbps",
-                    "sample_rate",
-                    "total_bytes",
-                    "n_padded",
-                    "duration_us",
-                )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                m = parse_mp3_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k, v in m.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, id3_bytes int, n_frames int,"
-            " bitrate_kbps int, sample_rate int, total_bytes int,"
-            " n_padded int, duration_us long"
-        ),
+    fields = [
+        ("id3_bytes", "int"), ("n_frames", "int"), ("bitrate_kbps", "int"),
+        ("sample_rate", "int"), ("total_bytes", "int"), ("n_padded", "int"),
+        ("duration_us", "long"),
+    ]
+    return map_blobs(
+        df, [blob_col], _meta_row(parse_mp3_meta, fields), fields, keep=[id_col]
     )
+
+
+def _warc_records(rid: Any, t: str, d: bytes) -> list[tuple[str, str, str, bytes]]:
+    """The md5-derived (type, record id, target URI, content) records
+    of one document, shared by the WARC and .warc.gz renderers."""
+    from ctgov_ai_etl_spark.functions.warc import http_envelope
+
+    recs = []
+    for j in range(2 + d[0] % 4):
+        body = t[j * 23 : j * 23 + 17 + ((d[3] + j) % 11)]
+        if (d[1] + j) % 3 > 0:
+            status = (200, 301, 404, 503)[(d[2] + j) % 4]
+            wtype, content = "response", http_envelope(status) + body.encode()
+        else:
+            wtype, content = "resource", body.encode()
+        recs.append((wtype, f"urn:doc{rid}-{j}", f"http://ex.com/{rid}/{j}", content))
+    return recs
 
 
 def render_test_warc(
@@ -1210,45 +955,12 @@ def render_test_warc(
     body is the text slice [j*23, j*23 + 17+((d3+j)%11)) — ASCII, so a
     SQL oracle computes every body length (including the truncated and
     empty overflow cases) closed-form."""
-    import hashlib as _hl
+    from ctgov_ai_etl_spark.functions.warc import build_warc
 
-    from ctgov_ai_etl_spark.functions.warc import build_warc, http_envelope
-    from ctgov_ai_etl_spark.session import ship_package
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        return (build_warc(_warc_records(rid, text, dig)),)
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                recs = []
-                for j in range(2 + d[0] % 4):
-                    body = t[j * 23 : j * 23 + 17 + ((d[3] + j) % 11)]
-                    if (d[1] + j) % 3 > 0:
-                        status = (200, 301, 404, 503)[(d[2] + j) % 4]
-                        wtype = "response"
-                        content = http_envelope(status) + body.encode()
-                    else:
-                        wtype = "resource"
-                        content = body.encode()
-                    recs.append(
-                        (
-                            wtype,
-                            f"urn:doc{rid}-{j}",
-                            f"http://ex.com/{rid}/{j}",
-                            content,
-                        )
-                    )
-                ids.append(rid)
-                blobs.append(build_warc(recs))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def warc_records_real(
@@ -1262,42 +974,15 @@ def warc_records_real(
     byte layout.  Arrow-batched, no keyed shuffle: CDX-style index
     extraction distributes embarrassingly over a 100 TB crawl."""
     from ctgov_ai_etl_spark.functions.warc import parse_warc_records
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    id_col,
-                    "rec_idx",
-                    "offset",
-                    "warc_type",
-                    "target_uri",
-                    "http_status",
-                    "content_length",
-                )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(parse_warc_records(bytes(data))):
-                    rows[id_col].append(rid)
-                    rows["rec_idx"].append(j)
-                    rows["offset"].append(rec["offset"])
-                    rows["warc_type"].append(rec["warc_type"])
-                    rows["target_uri"].append(rec["target_uri"])
-                    rows["http_status"].append(rec["http_status"])
-                    rows["content_length"].append(rec["content_length"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, rec_idx int, offset int, warc_type string,"
-            " target_uri string, http_status int, content_length int"
-        ),
+    fields = [
+        ("rec_idx", "int"), ("offset", "int"), ("warc_type", "string"),
+        ("target_uri", "string"), ("http_status", "int"),
+        ("content_length", "int"),
+    ]
+    return map_blobs(
+        df, [blob_col], _walk_rows(parse_warc_records, fields), fields,
+        keep=[id_col], explode=True,
     )
 
 
@@ -1312,8 +997,6 @@ def render_test_h264(
     correctness is isolated to the framing logic the query checks).
     The SPS itself DOES exercise emulation prevention when its
     Exp-Golomb zeros pack into 00 00 0x runs."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.h264meta import (
         NAL_IDR,
         NAL_NON_IDR,
@@ -1322,43 +1005,31 @@ def render_test_h264(
         build_annexb,
         build_sps,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, d: bytes) -> tuple:
+        sps = build_sps(
+            width_mbs=1 + d[0] % 16,
+            height_mbs=1 + d[1] % 16,
+            level_idc=(10, 20, 30, 40, 50)[d[2] % 5],
+            crop_right=d[3] % 2,
+            crop_bottom=d[4] % 2,
+        )
+        nals = [(NAL_SPS, sps), (NAL_PPS, b"\xc8\x42")]
+        for j in range(1 + d[5] % 3):
+            nals.append(
+                (NAL_IDR,
+                 bytes(17 + ((j * 29 + k * 11) % 200)
+                       for k in range(6 + (d[7] + j) % 9)))
+            )
+        for j in range(d[6] % 4):
+            nals.append(
+                (NAL_NON_IDR,
+                 bytes(17 + ((j * 31 + k * 13) % 200)
+                       for k in range(6 + (d[7] + j) % 9)))
+            )
+        return (build_annexb(nals),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                sps = build_sps(
-                    width_mbs=1 + d[0] % 16,
-                    height_mbs=1 + d[1] % 16,
-                    level_idc=(10, 20, 30, 40, 50)[d[2] % 5],
-                    crop_right=d[3] % 2,
-                    crop_bottom=d[4] % 2,
-                )
-                nals = [(NAL_SPS, sps), (NAL_PPS, b"\xc8\x42")]
-                for j in range(1 + d[5] % 3):
-                    nals.append(
-                        (NAL_IDR,
-                         bytes(17 + ((j * 29 + k * 11) % 200)
-                               for k in range(6 + (d[7] + j) % 9)))
-                    )
-                for j in range(d[6] % 4):
-                    nals.append(
-                        (NAL_NON_IDR,
-                         bytes(17 + ((j * 31 + k * 13) % 200)
-                               for k in range(6 + (d[7] + j) % 9)))
-                    )
-                ids.append(rid)
-                blobs.append(build_annexb(nals))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def h264_meta_real(
@@ -1375,43 +1046,25 @@ def h264_meta_real(
         NAL_NON_IDR,
         parse_annexb,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> tuple:
+        recs = parse_annexb(bytes(data))
+        sps = next(r for r in recs if "width" in r)
+        return (
+            sps["profile_idc"], sps["level_idc"], sps["width"], sps["height"],
+            len(recs),
+            sum(1 for r in recs if r["nal_type"] == NAL_IDR),
+            sum(1 for r in recs if r["nal_type"] == NAL_NON_IDR),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    id_col, "profile_idc", "level_idc", "width",
-                    "height", "n_nals", "n_idr", "n_non_idr",
-                )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                recs = parse_annexb(bytes(data))
-                sps = next(r for r in recs if "width" in r)
-                rows[id_col].append(rid)
-                rows["profile_idc"].append(sps["profile_idc"])
-                rows["level_idc"].append(sps["level_idc"])
-                rows["width"].append(sps["width"])
-                rows["height"].append(sps["height"])
-                rows["n_nals"].append(len(recs))
-                rows["n_idr"].append(
-                    sum(1 for r in recs if r["nal_type"] == NAL_IDR)
-                )
-                rows["n_non_idr"].append(
-                    sum(1 for r in recs if r["nal_type"] == NAL_NON_IDR)
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, profile_idc int, level_idc int, width int,"
-            " height int, n_nals int, n_idr int, n_non_idr int"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("profile_idc", "int"), ("level_idc", "int"), ("width", "int"),
+         ("height", "int"), ("n_nals", "int"), ("n_idr", "int"),
+         ("n_non_idr", "int")],
+        keep=[id_col],
     )
 
 
@@ -1425,44 +1078,30 @@ def render_test_mp4(
     optional second (audio) trak, and the 64-bit largesize mdat
     framing on half the corpus.  Real box framing, filler payload —
     exactly what a container walk is and isn't sensitive to."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.mp4meta import (
         LANG_CHOICES,
         TIMESCALE_CHOICES,
         build_mp4,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, d: bytes) -> tuple:
+        return (
+            build_mp4(
+                movie_timescale=TIMESCALE_CHOICES[d[0] % 4],
+                duration=1 + ((d[1] << 8) | d[2]) % 100000,
+                width=(1 + d[3] % 64) * 16,
+                height=(1 + d[4] % 64) * 16,
+                n_samples=1 + d[5] % 50,
+                sample_size=100 + d[6] % 156,
+                mdat_large=bool(d[7] % 2),
+                free_pad=d[8] % 32,
+                n_traks=1 + d[9] % 2,
+                lang=LANG_CHOICES[d[10] % 5],
+                version=1 if d[11] % 4 == 0 else 0,
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                ids.append(rid)
-                blobs.append(
-                    build_mp4(
-                        movie_timescale=TIMESCALE_CHOICES[d[0] % 4],
-                        duration=1 + ((d[1] << 8) | d[2]) % 100000,
-                        width=(1 + d[3] % 64) * 16,
-                        height=(1 + d[4] % 64) * 16,
-                        n_samples=1 + d[5] % 50,
-                        sample_size=100 + d[6] % 156,
-                        mdat_large=bool(d[7] % 2),
-                        free_pad=d[8] % 32,
-                        n_traks=1 + d[9] % 2,
-                        lang=LANG_CHOICES[d[10] % 5],
-                        version=1 if d[11] % 4 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def mp4_meta_real(
@@ -1476,34 +1115,15 @@ def mp4_meta_real(
     geometry, language, payload size — all exact integers.  Zero
     shuffle."""
     from ctgov_ai_etl_spark.functions.mp4meta import parse_mp4_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-    fields = (
-        "n_boxes", "n_traks", "box_version", "movie_timescale",
-        "movie_duration_ms", "width", "height", "media_lang",
-        "mdat_bytes", "mdat_large", "total_bytes",
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (id_col, *fields)}
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_mp4_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k in fields:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, n_boxes int, n_traks int, box_version int,"
-            " movie_timescale int, movie_duration_ms long, width int,"
-            " height int, media_lang string, mdat_bytes long,"
-            " mdat_large int, total_bytes long"
-        ),
+    fields = [
+        ("n_boxes", "int"), ("n_traks", "int"), ("box_version", "int"),
+        ("movie_timescale", "int"), ("movie_duration_ms", "long"),
+        ("width", "int"), ("height", "int"), ("media_lang", "string"),
+        ("mdat_bytes", "long"), ("mdat_large", "int"), ("total_bytes", "long"),
+    ]
+    return map_blobs(
+        df, [blob_col], _meta_row(parse_mp4_meta, fields), fields, keep=[id_col]
     )
 
 
@@ -1517,39 +1137,25 @@ def render_test_wav(
     rule), and a filler data payload.  Real chunk framing, fake
     samples — exactly what container triage is and isn't sensitive
     to."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.wavmeta import (
         BITS_CHOICES,
         RATE_CHOICES,
         build_wav,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, d: bytes) -> tuple:
+        return (
+            build_wav(
+                sample_rate=RATE_CHOICES[d[0] % 5],
+                channels=1 + d[1] % 2,
+                bits=BITS_CHOICES[d[2] % 4],
+                n_samples=1 + ((d[3] << 8) | d[4]) % 20000,
+                info_len=1 + d[5] % 40,
+                with_fact=bool(d[6] % 2),
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                ids.append(rid)
-                blobs.append(
-                    build_wav(
-                        sample_rate=RATE_CHOICES[d[0] % 5],
-                        channels=1 + d[1] % 2,
-                        bits=BITS_CHOICES[d[2] % 4],
-                        n_samples=1 + ((d[3] << 8) | d[4]) % 20000,
-                        info_len=1 + d[5] % 40,
-                        with_fact=bool(d[6] % 2),
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def wav_meta_real(
@@ -1562,34 +1168,15 @@ def wav_meta_real(
     rate / depth / exact integer-microsecond duration — all before
     any sample is touched.  Zero shuffle."""
     from ctgov_ai_etl_spark.functions.wavmeta import parse_wav_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-    fields = (
-        "n_chunks", "channels", "sample_rate", "bits_per_sample",
-        "block_align", "byte_rate", "n_samples", "data_bytes",
-        "duration_us", "total_bytes",
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (id_col, *fields)}
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_wav_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k in fields:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, n_chunks int, channels int, sample_rate int,"
-            " bits_per_sample int, block_align int, byte_rate int,"
-            " n_samples long, data_bytes long, duration_us long,"
-            " total_bytes long"
-        ),
+    fields = [
+        ("n_chunks", "int"), ("channels", "int"), ("sample_rate", "int"),
+        ("bits_per_sample", "int"), ("block_align", "int"),
+        ("byte_rate", "int"), ("n_samples", "long"), ("data_bytes", "long"),
+        ("duration_us", "long"), ("total_bytes", "long"),
+    ]
+    return map_blobs(
+        df, [blob_col], _meta_row(parse_wav_meta, fields), fields, keep=[id_col]
     )
 
 
@@ -1602,37 +1189,23 @@ def render_test_pdf(
     lengths, a fixed-width xref table whose offsets are real, and a
     trailer.  Every parameter is fixed-width by construction so the
     whole byte layout is closed-form for the oracle."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.pdfmeta import build_pdf
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, d: bytes) -> tuple:
+        k = 1 + d[0] % 3
+        return (
+            build_pdf(
+                n_pages=k,
+                width=100 + ((d[1] << 8) | d[2]) % 900,
+                height=100 + ((d[3] << 8) | d[4]) % 900,
+                lengths=[
+                    100 + ((d[5 + 2 * i] << 8) | d[6 + 2 * i]) % 900
+                    for i in range(k)
+                ],
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                k = 1 + d[0] % 3
-                ids.append(rid)
-                blobs.append(
-                    build_pdf(
-                        n_pages=k,
-                        width=100 + ((d[1] << 8) | d[2]) % 900,
-                        height=100 + ((d[3] << 8) | d[4]) % 900,
-                        lengths=[
-                            100 + ((d[5 + 2 * i] << 8) | d[6 + 2 * i]) % 900
-                            for i in range(k)
-                        ],
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def pdf_meta_real(
@@ -1645,32 +1218,15 @@ def pdf_meta_real(
     emits the document triage row — pages / geometry / content
     volume / structural integrity.  Zero shuffle."""
     from ctgov_ai_etl_spark.functions.pdfmeta import parse_pdf_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-    fields = (
-        "pdf_version", "n_objects", "n_pages", "media_w", "media_h",
-        "total_content_bytes", "xref_offset", "total_bytes",
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (id_col, *fields)}
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_pdf_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k in fields:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, pdf_version string, n_objects int,"
-            " n_pages int, media_w int, media_h int,"
-            " total_content_bytes long, xref_offset long, total_bytes long"
-        ),
+    fields = [
+        ("pdf_version", "string"), ("n_objects", "int"), ("n_pages", "int"),
+        ("media_w", "int"), ("media_h", "int"),
+        ("total_content_bytes", "long"), ("xref_offset", "long"),
+        ("total_bytes", "long"),
+    ]
+    return map_blobs(
+        df, [blob_col], _meta_row(parse_pdf_meta, fields), fields, keep=[id_col]
     )
 
 
@@ -1685,36 +1241,27 @@ def warc_response_texts(
     response records only; other records and statuses are triaged out
     here, before any curation cost.  Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.warc import parse_warc_records
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> Iterator[tuple]:
+        recs = parse_warc_records(bytes(data), include_body=True)
+        for j, rec in enumerate(recs):
+            if rec["http_status"] == 200:
+                # UTF-8, matching body.encode() in the WARC renderer.
+                # NOTE the closed-form length oracles equate DuckDB
+                # character length(text) with the Content-Length BYTE
+                # count, which holds only for ASCII corpora (the
+                # generated documents table is verified ASCII-only);
+                # non-ASCII text would desync char-vs-byte lengths in
+                # the oracle, not crash here.
+                yield j, rec["body"].decode("utf-8")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, bodies = [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(
-                    parse_warc_records(bytes(data), include_body=True)
-                ):
-                    if rec["http_status"] == 200:
-                        ids.append(rid)
-                        idxs.append(j)
-                        # UTF-8, matching body.encode() in the WARC
-                        # renderer.  NOTE the closed-form length
-                        # oracles equate DuckDB character length(text)
-                        # with the Content-Length BYTE count, which
-                        # holds only for ASCII corpora (the generated
-                        # documents table is verified ASCII-only);
-                        # non-ASCII text would desync char-vs-byte
-                        # lengths in the oracle, not crash here.
-                        bodies.append(rec["body"].decode("utf-8"))
-            yield pd.DataFrame(
-                {id_col: ids, "rec_idx": idxs, "body": bodies}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, rec_idx int, body string"
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("rec_idx", "int"), ("body", "string")],
+        keep=[id_col],
+        explode=True,
     )
 
 
@@ -1729,37 +1276,19 @@ def render_test_tar(
     cases) and a 1-byte ``.cls`` member carrying label (d2+k)%10.
     Every header field, data-block pad, and the end-of-archive marker
     are real — the SQL oracle replays the whole block layout."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.tarmeta import build_tar
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, t: str, d: bytes) -> tuple:
+        members = []
+        for k in range(2 + d[0] % 3):
+            body = t[k * 31 : k * 31 + 13 + ((d[1] + k) % 9)]
+            members.append((f"{int(rid):05d}-{k}.txt", body.encode()))
+            members.append(
+                (f"{int(rid):05d}-{k}.cls", str((d[2] + k) % 10).encode())
+            )
+        return (build_tar(members),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                members = []
-                for k in range(2 + d[0] % 3):
-                    body = t[k * 31 : k * 31 + 13 + ((d[1] + k) % 9)]
-                    members.append(
-                        (f"{int(rid):05d}-{k}.txt", body.encode())
-                    )
-                    members.append(
-                        (f"{int(rid):05d}-{k}.cls",
-                         str((d[2] + k) % 10).encode())
-                    )
-                ids.append(rid)
-                blobs.append(build_tar(members))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def tar_members_real(
@@ -1772,32 +1301,14 @@ def tar_members_real(
     (512 + 512*ceil(size/512) per predecessor) hash-checks the whole
     shard layout.  Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.tarmeta import parse_tar_members
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: [] for k in (id_col, "member_idx", "name", "size",
-                                "offset")
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(parse_tar_members(bytes(data))):
-                    rows[id_col].append(rid)
-                    rows["member_idx"].append(j)
-                    rows["name"].append(rec["name"])
-                    rows["size"].append(rec["size"])
-                    rows["offset"].append(rec["offset"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, member_idx int, name string, size int,"
-            " offset int"
-        ),
+    fields = [
+        ("member_idx", "int"), ("name", "string"), ("size", "int"),
+        ("offset", "int"),
+    ]
+    return map_blobs(
+        df, [blob_col], _walk_rows(parse_tar_members, fields), fields,
+        keep=[id_col], explode=True,
     )
 
 
@@ -1817,52 +1328,31 @@ def wds_samples_real(
         parse_tar_members,
         sample_key,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(data: bytes) -> Iterator[tuple]:
+        samples: dict[str, dict] = {}  # insertion order = shard order
+        for rec in parse_tar_members(bytes(data), include_content=True):
+            s = samples.setdefault(
+                sample_key(rec["name"]),
+                {"n": 0, "bytes": 0, "txt": 0, "label": None},
+            )
+            s["n"] += 1
+            s["bytes"] += rec["size"]
+            if rec["name"].endswith(".txt"):
+                s["txt"] = rec["size"]
+            elif rec["name"].endswith(".cls"):
+                s["label"] = int(rec["content"].decode("ascii"))
+        for key, s in samples.items():
+            yield key, s["n"], s["bytes"], s["txt"], s["label"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (id_col, "sample_id", "n_parts", "payload_bytes",
-                          "txt_len", "label")
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                samples: dict[str, dict] = {}
-                order: list[str] = []
-                for rec in parse_tar_members(bytes(data),
-                                             include_content=True):
-                    key = sample_key(rec["name"])
-                    if key not in samples:
-                        samples[key] = {
-                            "n": 0, "bytes": 0, "txt": 0, "label": None,
-                        }
-                        order.append(key)
-                    s = samples[key]
-                    s["n"] += 1
-                    s["bytes"] += rec["size"]
-                    if rec["name"].endswith(".txt"):
-                        s["txt"] = rec["size"]
-                    elif rec["name"].endswith(".cls"):
-                        s["label"] = int(rec["content"].decode("ascii"))
-                for key in order:
-                    s = samples[key]
-                    rows[id_col].append(rid)
-                    rows["sample_id"].append(key)
-                    rows["n_parts"].append(s["n"])
-                    rows["payload_bytes"].append(s["bytes"])
-                    rows["txt_len"].append(s["txt"])
-                    rows["label"].append(s["label"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, sample_id string, n_parts int,"
-            " payload_bytes int, txt_len int, label int"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("sample_id", "string"), ("n_parts", "int"),
+         ("payload_bytes", "int"), ("txt_len", "int"), ("label", "int")],
+        keep=[id_col],
+        explode=True,
     )
 
 
@@ -1875,46 +1365,14 @@ def render_test_warcgz(
     the members concatenated — the ISO 28500 annex framing actual web
     archives use so records are seekable without inflating the whole
     file.  functions/gzipmeta.py + functions/warc.py."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.gzipmeta import build_gzip_members
-    from ctgov_ai_etl_spark.functions.warc import build_record, http_envelope
-    from ctgov_ai_etl_spark.session import ship_package
+    from ctgov_ai_etl_spark.functions.warc import build_record
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, text: str, dig: bytes) -> tuple:
+        recs = [build_record(*r) for r in _warc_records(rid, text, dig)]
+        return (build_gzip_members(recs),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                recs = []
-                for j in range(2 + d[0] % 4):
-                    body = t[j * 23 : j * 23 + 17 + ((d[3] + j) % 11)]
-                    if (d[1] + j) % 3 > 0:
-                        status = (200, 301, 404, 503)[(d[2] + j) % 4]
-                        content = http_envelope(status) + body.encode()
-                        wtype = "response"
-                    else:
-                        content = body.encode()
-                        wtype = "resource"
-                    recs.append(
-                        build_record(
-                            wtype,
-                            f"urn:doc{rid}-{j}",
-                            f"http://ex.com/{rid}/{j}",
-                            content,
-                        )
-                    )
-                ids.append(rid)
-                blobs.append(build_gzip_members(recs))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def warcgz_records_real(
@@ -1931,45 +1389,30 @@ def warcgz_records_real(
     compression layer.  Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.gzipmeta import parse_gzip_members
     from ctgov_ai_etl_spark.functions.warc import WarcError, parse_warc_records
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    id_col, "member_idx", "warc_type", "target_uri",
-                    "http_status", "content_length", "record_bytes",
+    def row(data: bytes) -> Iterator[tuple]:
+        for j, m in enumerate(parse_gzip_members(bytes(data))):
+            recs = parse_warc_records(m["body"])
+            if len(recs) != 1:
+                raise WarcError(
+                    f"gzip member {j} holds {len(recs)} WARC "
+                    "records; .warc.gz requires exactly one"
                 )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, m in enumerate(parse_gzip_members(bytes(data))):
-                    recs = parse_warc_records(m["body"])
-                    if len(recs) != 1:
-                        raise WarcError(
-                            f"gzip member {j} holds {len(recs)} WARC "
-                            "records; .warc.gz requires exactly one"
-                        )
-                    r = recs[0]
-                    rows[id_col].append(rid)
-                    rows["member_idx"].append(j)
-                    rows["warc_type"].append(r["warc_type"])
-                    rows["target_uri"].append(r["target_uri"])
-                    rows["http_status"].append(r["http_status"])
-                    rows["content_length"].append(r["content_length"])
-                    rows["record_bytes"].append(m["n_bytes"])
-            yield pd.DataFrame(rows)
+            r = recs[0]
+            yield (
+                j, r["warc_type"], r["target_uri"], r["http_status"],
+                r["content_length"], m["n_bytes"],
+            )
 
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, member_idx int, warc_type string,"
-            " target_uri string, http_status int, content_length int,"
-            " record_bytes int"
-        ),
+    return map_blobs(
+        df,
+        [blob_col],
+        row,
+        [("member_idx", "int"), ("warc_type", "string"),
+         ("target_uri", "string"), ("http_status", "int"),
+         ("content_length", "int"), ("record_bytes", "int")],
+        keep=[id_col],
+        explode=True,
     )
 
 
@@ -1982,34 +1425,19 @@ def render_test_zip(
     [k*27, k*27 + 14+((d1+k)%12)) including truncated/empty overflow
     cases — local headers, central directory, EOCD, and real CRC-32s
     all written byte-exactly so the SQL oracle replays the layout."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.zipmeta import build_zip
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    def row(rid: Any, t: str, d: bytes) -> tuple:
+        entries = [
+            (
+                f"{int(rid):05d}-{k}.txt",
+                t[k * 27 : k * 27 + 14 + ((d[1] + k) % 12)].encode(),
+            )
+            for k in range(2 + d[0] % 4)
+        ]
+        return (build_zip(entries),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                entries = [
-                    (
-                        f"{int(rid):05d}-{k}.txt",
-                        t[k * 27 : k * 27 + 14 + ((d[1] + k) % 12)].encode(),
-                    )
-                    for k in range(2 + d[0] % 4)
-                ]
-                ids.append(rid)
-                blobs.append(build_zip(entries))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _render_blobs(df, id_col, text_col, row, _BLOB, spread)
 
 
 def zip_entries_real(
@@ -2022,31 +1450,12 @@ def zip_entries_real(
     running sum (STORED members make the layout closed-form).
     Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.zipmeta import parse_zip_entries
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (id_col, "entry_idx", "name", "n_bytes",
-                          "local_offset")
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(parse_zip_entries(bytes(data))):
-                    rows[id_col].append(rid)
-                    rows["entry_idx"].append(j)
-                    rows["name"].append(rec["name"])
-                    rows["n_bytes"].append(rec["n_bytes"])
-                    rows["local_offset"].append(rec["local_offset"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, entry_idx int, name string, n_bytes int,"
-            " local_offset int"
-        ),
+    fields = [
+        ("entry_idx", "int"), ("name", "string"), ("n_bytes", "int"),
+        ("local_offset", "int"),
+    ]
+    return map_blobs(
+        df, [blob_col], _walk_rows(parse_zip_entries, fields), fields,
+        keep=[id_col], explode=True,
     )

@@ -45,6 +45,19 @@ def reference_csv_projection(df: DataFrame, ai_column: str | None = None) -> Dat
     return df.select(*cols)
 
 
+def _has_data_row(part_dir: str) -> bool:
+    """True iff some part file under ``part_dir`` holds a row after its
+    header.  Spark writes one header-only part file for empty input,
+    so emptiness is read off the written output instead of running
+    the plan a second time."""
+    for part in glob.glob(os.path.join(part_dir, "part-*.csv")):
+        with open(part, encoding="utf-8") as fh:
+            fh.readline()  # header
+            if fh.readline():
+                return True
+    return False
+
+
 def write_reference_csv(
     df: DataFrame,
     path: str,
@@ -52,21 +65,27 @@ def write_reference_csv(
     single_file: bool = True,
 ) -> bool:
     """Write the reference-shaped CSV. Returns False (no write) on
-    empty input, mirroring etl.py:440-442."""
+    empty input, mirroring etl.py:440-442.
+
+    The plan runs once: it is written to a scratch directory next to
+    ``path`` (a local filesystem path) and moved into place only if it
+    holds a row."""
     out = reference_csv_projection(df, ai_column)
-    if out.isEmpty():
-        return False
-    writer = (out.coalesce(1) if single_file else out).write.mode("overwrite").option(
-        "header", True
-    )
     if single_file:
         # Spark writes a directory; for parity we surface one .csv file.
-        tmp = tempfile.mkdtemp(prefix="ctgov_csv_")
-        writer.csv(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        shutil.move(part, path)
+        out = out.coalesce(1)
+    parent = os.path.dirname(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="ctgov_csv_", dir=parent)
+    try:
+        out.write.mode("overwrite").option("header", True).csv(tmp)
+        if not _has_data_row(tmp):
+            return False
+        if single_file:
+            shutil.move(glob.glob(os.path.join(tmp, "part-*.csv"))[0], path)
+        else:
+            shutil.rmtree(path, ignore_errors=True)
+            shutil.move(tmp, path)
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    else:
-        writer.csv(path)
     return True

@@ -248,6 +248,21 @@ def test_profile_columns_report(spark):
         profile_columns(df, [])
 
 
+def test_profile_columns_spread_unchanged(spark):
+    """profile_columns prunes+spreads its input; the report must be
+    unchanged (vs a hand computation) for an in-memory relation."""
+    from ctgov_ai_etl_spark.operators.expectations import profile_columns
+
+    df = spark.createDataFrame(
+        [(1, "a", 2.0), (2, None, 4.0), (3, "b", None), (3, "b", 8.0)],
+        "id long, s string, v double",
+    )
+    rep = {r.column: r for r in profile_columns(df, ["id", "s", "v"]).collect()}
+    assert rep["id"].total == 4 and rep["id"].n_distinct == 3
+    assert rep["s"].nulls == 1 and rep["s"].min_value == "a"
+    assert rep["v"].nulls == 1 and rep["v"].max_value == "8.0"
+
+
 def test_containment_pairs_finds_subsets_jaccard_misses(spark):
     from ctgov_ai_etl_spark.operators.fuzzy import containment_pairs
 

@@ -125,6 +125,79 @@ def test_render_decode_distributed(spark):
         assert r["fmt"] == ("ppm" if rid % 2 == 0 else "png")
 
 
+def _docs(spark, n=40):
+    return spark.createDataFrame(
+        [(i, f"doc text number {i} with tokens") for i in range(n)],
+        "doc_id long, text string",
+    ).coalesce(1)
+
+
+def test_render_spread_same_payloads(spark):
+    """Renderers with ``spread=True`` produce the identical payload set
+    as the unspread form: the exchange only redistributes rows."""
+    from ctgov_ai_etl_spark.operators.multimodal import render_test_jpegs
+
+    d = _docs(spark)
+    plain = {
+        r["doc_id"]: bytes(r["blob"])
+        for r in render_test_jpegs(d, "doc_id").collect()
+    }
+    spread = {
+        r["doc_id"]: bytes(r["blob"])
+        for r in render_test_jpegs(d, "doc_id", spread=True).collect()
+    }
+    assert plain == spread  # byte-identical payloads, any row order
+
+
+def test_render_spread_widens_single_partition(spark):
+    """``spread=True`` widens a one-partition source up to the session
+    parallelism; the default leaves it alone."""
+    from ctgov_ai_etl_spark.operators.multimodal import render_test_wav
+
+    d = _docs(spark)
+    par = spark.sparkContext.defaultParallelism
+    wide = render_test_wav(d, "doc_id", spread=True)
+    assert wide.rdd.getNumPartitions() == par
+    narrow = render_test_wav(d, "doc_id")
+    assert narrow.rdd.getNumPartitions() == 1
+
+
+def test_map_blobs_explode_zero_and_many_rows_keeps_passthrough_types(spark):
+    """An exploding row function may emit no row for one input and
+    several for another; every output row carries its own input's
+    passthrough values, typed as in the input schema."""
+    import datetime as dt
+
+    from ctgov_ai_etl_spark.operators.multimodal import map_blobs
+
+    df = spark.createDataFrame(
+        [
+            (1, 7, dt.date(2024, 1, 1), "k1", bytearray(b"")),
+            (2, None, dt.date(2024, 1, 2), None, bytearray(b"abc")),
+            (3, 9, None, "k3", bytearray(b"z")),
+        ],
+        "doc_id long, n int, day date, tag string, blob binary",
+    )
+
+    def row(data):
+        return [(i, chr(c)) for i, c in enumerate(bytes(data))]
+
+    out = map_blobs(
+        df, ["blob"], row, [("pos", "int"), ("ch", "string")],
+        keep=["doc_id", "n", "day", "tag"], explode=True,
+    )
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,n:int,day:date,tag:string,pos:int,ch:string>"
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [
+        (2, None, dt.date(2024, 1, 2), None, 0, "a"),
+        (2, None, dt.date(2024, 1, 2), None, 1, "b"),
+        (2, None, dt.date(2024, 1, 2), None, 2, "c"),
+        (3, 9, None, "k3", 0, "z"),
+    ]
+
+
 def test_decode_real_unsupported_format_raises(spark):
     from ctgov_ai_etl_spark.operators.multimodal import decode_image_real
 

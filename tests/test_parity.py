@@ -174,6 +174,55 @@ def test_yaml_config_drop_in(spark, tmp_path):
     assert os.path.exists(out_csv)
 
 
+# Worker-importable LLM stand-in that appends one byte per classify
+# call to a per-process file, so the test can count calls made in
+# the Python workers.
+_COUNTING_CLIENT = """
+import os
+
+from ctgov_ai_etl_spark.operators.llm import PREGNANCY_RULES
+
+
+class CountingClient:
+    def __init__(self, count_dir):
+        self.path = os.path.join(count_dir, f"calls-{os.getpid()}")
+
+    def classify(self, prompt):
+        with open(self.path, "a") as fh:
+            fh.write("x")
+        return PREGNANCY_RULES.classify(prompt)
+
+
+def factory(gem_cfg):
+    return CountingClient(gem_cfg["count_dir"])
+"""
+
+
+def test_pipeline_csv_path_classifies_each_row_once(spark, tmp_path):
+    """Writing the parity CSV runs the classify stage once: exactly one
+    LLM call per written row on the run_pipeline(..., csv_path=...)
+    path (an emptiness probe ahead of the write would run it twice)."""
+    from ctgov_ai_etl_spark.config import load_config
+    from ctgov_ai_etl_spark.plans.pipeline import run_pipeline
+
+    module = tmp_path / "counting_llm_client.py"
+    module.write_text(_COUNTING_CLIENT)
+    spark.sparkContext.addPyFile(str(module))
+    count_dir = tmp_path / "calls"
+    count_dir.mkdir()
+    cfg = load_config("examples/pipeline_config.yaml")
+    cfg["gemini"]["client_factory"] = "counting_llm_client:factory"
+    cfg["gemini"]["count_dir"] = str(count_dir)
+    del cfg["ai_processing"]["max_rows"]  # classify every row
+    out_csv = os.path.join(tmp_path, "out.csv")
+    run_pipeline(spark, cfg, csv_path=out_csv)
+    with open(out_csv, newline="", encoding="utf-8") as fh:
+        n_rows = sum(1 for _ in csv.DictReader(fh))
+    calls = sum(p.stat().st_size for p in count_dir.iterdir())
+    assert n_rows == 57
+    assert calls == n_rows
+
+
 def test_csv_sink_empty_input_no_write(spark, tmp_path):
     flat = _flat(spark, 5).filter(F.lit(False))
     path = os.path.join(tmp_path, "never.csv")

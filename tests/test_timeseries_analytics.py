@@ -117,3 +117,30 @@ def test_retention_counts_distinct_users_per_offset(spark, tmp_path):
     assert got[(w0, 2)] == 1      # only u1 returns in week 2
     assert (w0, 1) not in got     # nobody active in week 1
     assert all(k[0] == w0 for k in got)  # u3 creates no cohort
+
+
+def test_bradley_terry_checkpoint_same_result(spark):
+    """ml_bradley_terry's eager localCheckpoint of the 5-row base frame
+    must not change strengths: re-derive them from the query at the
+    smallest SF and check normalization + determinism across two runs."""
+    import os
+
+    from tests.conftest import SF_SMALL as sf
+
+    if not os.path.isdir(sf):
+        import pytest
+
+        pytest.skip("no sf0.001 testdata")
+    from ctgov_ai_etl_spark.queries import load_all
+
+    reg = load_all()
+    r1 = sorted(
+        (r.item, r.wins, r.strength)
+        for r in reg["ml_bradley_terry"].fn(spark, sf).collect()
+    )
+    r2 = sorted(
+        (r.item, r.wins, r.strength)
+        for r in reg["ml_bradley_terry"].fn(spark, sf).collect()
+    )
+    assert r1 == r2
+    assert abs(sum(s for _, _, s in r1) - 1.0) < 1e-4

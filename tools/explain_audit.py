@@ -1922,6 +1922,31 @@ CHECKS["mm_audio_mp3_meta"] = [
     ("zero-shuffle codec walk", r"\A(?!.*Exchange hashpartitioning)"),
     ("Arrow-batched mapInPandas stages", r"MapInPandas"),
 ]
+CHECKS["doc_pdf_meta"] = [
+    ("render and parse are Arrow-batched mapInPandas stages", r"MapInPandas"),
+    ("no shuffle in the codec path", r"\A(?!.*Exchange hashpartitioning)"),
+]
+CHECKS["mm_audio_wav_meta"] = [
+    ("render and parse are Arrow-batched mapInPandas stages", r"MapInPandas"),
+    ("no shuffle in the codec path", r"\A(?!.*Exchange hashpartitioning)"),
+]
+CHECKS["mm_binary_plumbing"] = [
+    ("blob + metadata struct stay in Catalyst: no Python boundary",
+     r"\A(?!.*(MapInPandas|ArrowEvalPython|BatchEvalPython))"),
+]
+CHECKS["mm_decode_features"] = [
+    ("decode is an Arrow-batched mapInPandas stage", r"MapInPandas"),
+    ("no shuffle in the codec path", r"\A(?!.*Exchange hashpartitioning)"),
+]
+CHECKS["mm_frame_sample"] = [
+    ("frame explode is an Arrow-batched mapInPandas stage", r"MapInPandas"),
+    ("no shuffle in the codec path", r"\A(?!.*Exchange hashpartitioning)"),
+]
+CHECKS["mm_video_mp4_boxes"] = [
+    ("render and box walk are Arrow-batched mapInPandas stages",
+     r"MapInPandas"),
+    ("no shuffle in the codec path", r"\A(?!.*Exchange hashpartitioning)"),
+]
 CHECKS["dq_profile_lineitem"] = [
     ("profile stats partially aggregated map-side", r"partial_"),
     ("no per-column cartesian re-scans", r"\A(?!.*CartesianProduct)"),
