@@ -6,12 +6,16 @@ per row on a single thread with a 0.5 s sleep (etl.py:292, 331 —
 ceiling ≈ 2 rows/s).  Here the same semantics become an Arrow-batched
 ``mapInPandas`` stage:
 
-- **client init once per task**, not per row (the reference hoists its
-  system instruction once at model init, etl.py:263-266 — the iterator
-  UDF form is the Spark analog);
-- **token-bucket rate limit per partition**: cluster-wide rate =
-  partitions × per-partition rate, an explicit knob instead of an
-  accidental single-thread ceiling;
+- **one client per worker thread, ≤ ``MAX_IN_FLIGHT`` calls in flight
+  per task, one shared token bucket**: prompt formatting and quota
+  decisions run in row order, then a small thread pool overlaps the
+  model calls and gathers labels back in row order.  Each pool thread
+  builds its own client once (the reference hoists its system
+  instruction once at model init, etl.py:263-266), so clients need not
+  be thread-safe;
+- **token-bucket rate limit per partition**, shared by the task's
+  threads: cluster-wide rate = partitions × per-partition rate, an
+  explicit knob instead of an accidental single-thread ceiling;
 - **templated prompt** with the reference's KeyError→skip semantics
   (etl.py:317-323);
 - **error → NULL → 'N/A'** fill (etl.py:400-406);
@@ -26,8 +30,10 @@ so the operator is DuckDB-oracle-checkable (CASE WHEN ... LIKE).
 
 from __future__ import annotations
 
+import threading
 import time
 from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -37,6 +43,10 @@ from pyspark.sql import functions as F
 from ctgov_ai_etl_spark.operators.limits import deterministic_split
 
 NA = "N/A"
+# Model calls one classify task keeps in flight (= its pool threads and
+# clients).  The calls wait on the model, not the CPU; 4-32 measured
+# flat on the ctgov pipeline, so 8 is enough.
+MAX_IN_FLIGHT = 8
 
 
 class LLMClient:
@@ -99,7 +109,8 @@ def resolve_client_factory(dotted: str) -> Callable[..., LLMClient]:
     (etl.py:236-273; config.example.yaml ``gemini.model`` /
     ``api_key_env``); here ``gemini.client_factory`` names a callable
     ``(gemini_cfg: dict) -> LLMClient``.  The factory runs INSIDE each
-    Spark task (client init is per-task, R10), so it must be
+    Spark task, once per worker thread (≤ ``MAX_IN_FLIGHT`` calls in
+    flight per task, one shared token bucket; R10), so it must be
     importable in the worker processes — the engine ships itself via
     addPyFile (session.ship_package), so any callable in this package
     or an installed module qualifies; an in-process registry would
@@ -128,23 +139,27 @@ def keyword_rule_client_factory(gem_cfg: dict) -> LLMClient:
 class TokenBucket:
     """Per-task rate limiter. The reference sleeps a flat
     ``api_delay`` after every call (etl.py:328-331); a token bucket
-    gives the same steady-state rate without penalizing short bursts."""
+    gives the same steady-state rate without penalizing short bursts.
+    Thread-safe: a task's pool threads share one bucket, and a waiter
+    holds the lock while it sleeps, so callers queue for tokens."""
 
     def __init__(self, rate_per_sec: float, burst: int = 1):
         self.rate = rate_per_sec
         self.capacity = float(burst)
         self.tokens = float(burst)
         self.t_last = time.monotonic()
+        self._lock = threading.Lock()
 
     def acquire(self) -> None:
-        while True:
-            now = time.monotonic()
-            self.tokens = min(self.capacity, self.tokens + (now - self.t_last) * self.rate)
-            self.t_last = now
-            if self.tokens >= 1.0:
-                self.tokens -= 1.0
-                return
-            time.sleep(min(1.0, (1.0 - self.tokens) / self.rate))
+        with self._lock:
+            while True:
+                now = time.monotonic()
+                self.tokens = min(self.capacity, self.tokens + (now - self.t_last) * self.rate)
+                self.t_last = now
+                if self.tokens >= 1.0:
+                    self.tokens -= 1.0
+                    return
+                time.sleep(min(1.0, (1.0 - self.tokens) / self.rate))
 
 
 def format_prompt(template: str, row: dict) -> str | None:
@@ -202,34 +217,48 @@ def llm_classify(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory()  # once per task, not per row (R10)
         limiter = TokenBucket(rate_per_sec) if rate_per_sec else None
+        local = threading.local()
+
+        def call(prompt: str) -> str | None:
+            client = getattr(local, "client", None)
+            if client is None:  # once per pool thread, not per row (R10)
+                client = local.client = client_factory()
+            if limiter is not None:
+                limiter.acquire()
+            try:
+                return client.classify(prompt)
+            except Exception:
+                return None  # error → null (R12, etl.py:299-302)
+
         spent: dict[int, int] = {}  # bucket -> rows classified so far
-        for pdf in batches:
-            labels = []
-            for row in pdf.to_dict("records"):
-                if per_bucket_cap is not None:
-                    b = row["__bucket"]
-                    if spent.get(b, 0) >= per_bucket_cap:
-                        labels.append(NA)  # quota exhausted: pass-through
-                        continue
-                    spent[b] = spent.get(b, 0) + 1
-                prompt = format_prompt(prompt_template, row)
-                if prompt is None:
+        with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
+            for pdf in batches:
+                # Row-order pass: quota decisions and prompts; only the
+                # model calls below overlap.
+                labels: list[str | None] = []
+                todo: list[int] = []
+                prompts: list[str] = []
+                for row in pdf.to_dict("records"):
+                    if per_bucket_cap is not None:
+                        b = row["__bucket"]
+                        if spent.get(b, 0) >= per_bucket_cap:
+                            labels.append(NA)  # quota exhausted: pass-through
+                            continue
+                        spent[b] = spent.get(b, 0) + 1
+                    prompt = format_prompt(prompt_template, row)
+                    if prompt is not None:
+                        todo.append(len(labels))
+                        prompts.append(prompt)
                     labels.append(None)
-                    continue
-                if limiter is not None:
-                    limiter.acquire()
-                try:
-                    labels.append(client.classify(prompt))
-                except Exception:
-                    labels.append(None)  # error → null (R12, etl.py:299-302)
-            if per_bucket_cap is not None:
-                pdf = pdf.drop(columns=["__bucket"])
-            else:
-                pdf = pdf.copy()
-            pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
-            yield pdf
+                for i, label in zip(todo, pool.map(call, prompts)):
+                    labels[i] = label
+                if per_bucket_cap is not None:
+                    pdf = pdf.drop(columns=["__bucket"])
+                else:
+                    pdf = pdf.copy()
+                pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
+                yield pdf
 
     head, rest = df, None
     if only_ids is not None:

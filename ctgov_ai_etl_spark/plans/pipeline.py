@@ -65,8 +65,10 @@ def run_pipeline(
             only_ids = ("nct_id", tuning)
         # Config-pluggable client (reference etl.py:236-273): resolve
         # gemini.client_factory as module:function — called with the
-        # gemini config dict once per task — defaulting to the
-        # deterministic mock so CI never needs a network.
+        # gemini config dict once per worker thread (≤ MAX_IN_FLIGHT
+        # calls in flight per task, one shared token bucket) —
+        # defaulting to the deterministic mock so CI never needs a
+        # network.
         if "client_factory" in gem:
             factory_fn = resolve_client_factory(gem["client_factory"])
             gem_cfg = dict(gem)

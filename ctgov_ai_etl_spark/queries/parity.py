@@ -80,9 +80,9 @@ DOC_RULES = KeywordRuleClient(
 )
 def llm_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llm_classify (R10-R14) over documents with the deterministic
-    keyword-rule client: Arrow-batched mapInPandas, per-task client
-    init, prompt templating, error→null→'N/A'. Oracle = the client's
-    own CASE WHEN rendering."""
+    keyword-rule client: Arrow-batched mapInPandas, one client per
+    worker thread with overlapped calls, prompt templating,
+    error→null→'N/A'. Oracle = the client's own CASE WHEN rendering."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return llm_classify(
         d,

@@ -10,6 +10,8 @@ to the parallelism at hand rather than the 200 default.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -30,18 +32,28 @@ def ship_package(spark: SparkSession) -> None:
     import the package.  The caller's session (e.g. the driver
     harness's) won't have the repo on PYTHONPATH — shipping a zip via
     ``addPyFile`` is the mechanism that works on any cluster, not
-    just local mode.  Idempotent per session.
+    just local mode.  Idempotent per session; the zip itself is built
+    once per process (:func:`_package_archive`).
     """
     key = id(spark)
     if key in _SHIPPED_SESSIONS:
         return
+    spark.sparkContext.addPyFile(_package_archive())
+    _SHIPPED_SESSIONS.add(key)
+
+
+@functools.cache
+def _package_archive() -> str:
+    """Zip this package once per process and return the zip's path.
+
+    Later sessions (and new SparkContexts) ship the same file; its temp
+    directory is removed when the interpreter exits."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     tmp = tempfile.mkdtemp(prefix="ctgov_pkg_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     zip_base = os.path.join(tmp, "ctgov_ai_etl_spark_pkg")
     root = os.path.dirname(pkg_dir)
-    archive = shutil.make_archive(zip_base, "zip", root_dir=root, base_dir="ctgov_ai_etl_spark")
-    spark.sparkContext.addPyFile(archive)
-    _SHIPPED_SESSIONS.add(key)
+    return shutil.make_archive(zip_base, "zip", root_dir=root, base_dir="ctgov_ai_etl_spark")
 
 
 #: Minimum free bytes /dev/shm must have before it is used as shuffle

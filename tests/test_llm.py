@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 from ctgov_ai_etl_spark.operators.llm import (
     NA,
     KeywordRuleClient,
@@ -123,6 +125,69 @@ def test_only_ids_narrowing(spark):
     assert all(v == NA for k, v in got.items() if k not in ("NCT2", "NCT4"))
 
 
+def test_rate_cap_is_shared_by_a_tasks_threads(spark):
+    """rate_per_sec caps the whole task, not each pool thread: 26 rows
+    at 50/s with burst 1 need 25 waits of 20 ms.  A private bucket per
+    thread would make all calls within about 0.06 s.  Each call answers
+    with its own clock reading, so the span excludes job overhead."""
+
+    class Clock(KeywordRuleClient):
+        def classify(self, prompt):
+            return repr(time.monotonic())
+
+    df = spark.createDataFrame(
+        [(i, "must be pregnant") for i in range(26)], "id long, criteria string"
+    ).coalesce(1)
+    out = llm_classify(
+        df, "{criteria}", out_col="label", rate_per_sec=50,
+        client_factory=lambda: Clock(rules=()),
+    )
+    stamps = [float(r.label) for r in out.collect()]
+    assert len(stamps) == 26
+    assert max(stamps) - min(stamps) >= 0.45  # lower bound only: a slow host is slower
+
+
+def test_overlapped_calls_keep_each_rows_label(spark):
+    """Calls finish out of order (0-3 ms sleeps); labels still land on
+    their own rows across several Arrow batches per task."""
+    import zlib
+
+    class Jittery(KeywordRuleClient):
+        def classify(self, prompt):
+            time.sleep((zlib.crc32(prompt.encode()) % 4) / 1000)
+            return "L" + prompt
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        df = spark.createDataFrame(
+            [(i, f"text {i}") for i in range(120)], "id long, criteria string"
+        ).repartition(2)
+        out = llm_classify(
+            df, "{criteria}", out_col="label",
+            client_factory=lambda: Jittery(rules=()),
+        )
+        rows = out.collect()
+    finally:
+        spark.conf.set(conf, saved)
+    assert len(rows) == 120
+    assert all(r.label == f"Ltext {r.id}" for r in rows)
+
+
+def test_client_factory_error_fails_the_task(spark):
+    """A broken client_factory is a configuration error, not a per-row
+    model error: the action fails instead of returning all 'N/A'."""
+
+    def broken_factory():
+        raise RuntimeError("client factory boom")
+
+    df = spark.createDataFrame([("1", "text"), ("2", "more")], "id string, criteria string")
+    out = llm_classify(df, "{criteria}", out_col="label", client_factory=broken_factory)
+    with pytest.raises(Exception, match="client factory boom"):
+        out.collect()
+
+
 def test_token_bucket_rate():
     bucket = TokenBucket(rate_per_sec=50, burst=1)
     t0 = time.monotonic()
@@ -130,6 +195,33 @@ def test_token_bucket_rate():
         bucket.acquire()
     elapsed = time.monotonic() - t0
     assert elapsed >= 0.15  # ~9 waits at 20ms
+
+
+def test_token_bucket_shared_by_threads_never_overissues():
+    """16 threads (more than cores) draw 80 tokens at 200/s, burst 1,
+    with a short switch interval: a lost update in the refill would
+    hand out tokens early and finish before 79 / 200 s."""
+    import sys
+    import threading
+
+    bucket = TokenBucket(rate_per_sec=200, burst=1)
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: [bucket.acquire() for _ in range(5)])
+            for _ in range(16)
+        ]
+        t0 = time.monotonic()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        elapsed = time.monotonic() - t0
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert elapsed >= 79 / 200 * 0.95
 
 
 def test_config_pluggable_client_factory(spark):

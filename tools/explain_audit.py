@@ -1969,6 +1969,16 @@ CHECKS["dedup_simhash"] = [
     ("survivor aggregation partial map-side", r"partial_"),
     ("band-bucket join broadcast where tiny", r"BroadcastHashJoin"),
 ]
+# llm_classify overlaps model calls inside its Python function, so the
+# physical plan must stay one mapInPandas stage with no shuffle added.
+CHECKS["ctgov_pipeline_e2e"] = [
+    ("classification is one Arrow-batched stage", r"MapInPandas"),
+    ("the LLM stage adds no shuffle", r"\A(?!.*Exchange)"),
+]
+CHECKS["llm_classify_documents"] = [
+    ("classification is one Arrow-batched stage", r"MapInPandas"),
+    ("the LLM stage adds no shuffle", r"\A(?!.*Exchange)"),
+]
 
 
 # ---------------------------------------------------------------------------
