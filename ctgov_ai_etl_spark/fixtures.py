@@ -84,9 +84,7 @@ def mock_ctgov_transport(n_studies: int = 57, page_size: int = 10, indexed: bool
     serves ``nextPageToken`` pages like the CTGov v2 API
     (/root/reference/etl.py:146-152 token protocol).  With
     ``indexed=True`` the second argument is a page *index* (the
-    parallel-partition protocol) instead of an opaque offset token.
-    ``countTotal`` in the params adds the corpus size as
-    ``totalCount``, as the live API does."""
+    parallel-partition protocol) instead of an opaque offset token."""
 
     def transport(params: dict[str, Any], token: Any) -> dict[str, Any]:
         size = int(params.get("pageSize", page_size))
@@ -100,8 +98,6 @@ def mock_ctgov_transport(n_studies: int = 57, page_size: int = 10, indexed: bool
             page = [prune_study(s, paths) for s in page]
         nxt = start + size
         out: dict[str, Any] = {"studies": page}
-        if params.get("countTotal"):
-            out["totalCount"] = n_studies
         if nxt < n_studies:
             out["nextPageToken"] = str(nxt)
         return out

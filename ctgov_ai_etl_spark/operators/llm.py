@@ -220,19 +220,25 @@ def llm_classify(
         limiter = TokenBucket(rate_per_sec) if rate_per_sec else None
         local = threading.local()
 
+        def client() -> LLMClient:
+            if not hasattr(local, "client"):  # once per pool thread, not per row (R10)
+                local.client = client_factory()
+            return local.client
+
         def call(prompt: str) -> str | None:
-            client = getattr(local, "client", None)
-            if client is None:  # once per pool thread, not per row (R10)
-                client = local.client = client_factory()
+            c = client()
             if limiter is not None:
                 limiter.acquire()
             try:
-                return client.classify(prompt)
+                return c.classify(prompt)
             except Exception:
                 return None  # error → null (R12, etl.py:299-302)
 
         spent: dict[int, int] = {}  # bucket -> rows classified so far
         with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
+            # First client before any row: a broken factory fails the task
+            # even when no row reaches a model call.
+            pool.submit(client).result()
             for pdf in batches:
                 # Row-order pass: quota decisions and prompts; only the
                 # model calls below overlap.

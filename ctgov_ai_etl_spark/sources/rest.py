@@ -9,11 +9,7 @@ is a ``DataSource`` so it participates in a Spark plan:
 
 - **partition planning = pagination.**  When the backend supports
   numbered pages (``paging=indexed``), each page becomes an
-  ``InputPartition`` and executors fetch in parallel.  The planner
-  fetches page 0 once with ``countTotal=true`` (the CTGov v2
-  parameter); when the reply carries an integer ``totalCount`` it
-  plans ``ceil(totalCount / page_size)`` partitions, at least 1 and
-  at most ``max_pages``, else ``max_pages``.  The public
+  ``InputPartition`` and executors fetch in parallel.  The public
   CTGov v2 API only hands out opaque ``nextPageToken``s
   (etl.py:146-152), which serializes page *discovery*; in that mode
   the source walks tokens in one partition (documented limitation,
@@ -41,7 +37,6 @@ so no network is touched in CI.
 from __future__ import annotations
 
 import json
-import math
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -256,16 +251,8 @@ class RestStudiesReader(DataSourceReader):
         if self.indexed:
             # page count is discoverable → one partition per page,
             # fetched in parallel by executors
-            return [PagePartition(i) for i in range(self._indexed_pages())]
+            return [PagePartition(i) for i in range(self.max_pages)]
         return [PagePartition(0)]  # opaque-token mode: sequential walk
-
-    def _indexed_pages(self) -> int:
-        """Pages to plan: from page 0's ``totalCount`` when the server
-        reports one, capped at ``max_pages``; else ``max_pages``."""
-        total = self.transport({**self._params(), "countTotal": "true"}, 0).get("totalCount")
-        if not isinstance(total, int) or isinstance(total, bool):
-            return self.max_pages
-        return min(self.max_pages, max(1, math.ceil(total / self.page_size)))
 
     def read(self, partition: PagePartition) -> Iterator[tuple]:
         transport = self.transport

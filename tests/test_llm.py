@@ -175,15 +175,17 @@ def test_overlapped_calls_keep_each_rows_label(spark):
     assert all(r.label == f"Ltext {r.id}" for r in rows)
 
 
-def test_client_factory_error_fails_the_task(spark):
+@pytest.mark.parametrize("template", ["{criteria}", "{missing}"], ids=["prompts", "no_prompts"])
+def test_client_factory_error_fails_the_task(spark, template):
     """A broken client_factory is a configuration error, not a per-row
-    model error: the action fails instead of returning all 'N/A'."""
+    model error: the action fails instead of returning all 'N/A', also
+    when no row reaches a model call ('{missing}' skips every prompt)."""
 
     def broken_factory():
         raise RuntimeError("client factory boom")
 
     df = spark.createDataFrame([("1", "text"), ("2", "more")], "id string, criteria string")
-    out = llm_classify(df, "{criteria}", out_col="label", client_factory=broken_factory)
+    out = llm_classify(df, template, out_col="label", client_factory=broken_factory)
     with pytest.raises(Exception, match="client factory boom"):
         out.collect()
 
@@ -195,33 +197,6 @@ def test_token_bucket_rate():
         bucket.acquire()
     elapsed = time.monotonic() - t0
     assert elapsed >= 0.15  # ~9 waits at 20ms
-
-
-def test_token_bucket_shared_by_threads_never_overissues():
-    """16 threads (more than cores) draw 80 tokens at 200/s, burst 1,
-    with a short switch interval: a lost update in the refill would
-    hand out tokens early and finish before 79 / 200 s."""
-    import sys
-    import threading
-
-    bucket = TokenBucket(rate_per_sec=200, burst=1)
-    saved = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [
-            threading.Thread(target=lambda: [bucket.acquire() for _ in range(5)])
-            for _ in range(16)
-        ]
-        t0 = time.monotonic()
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=30)
-        elapsed = time.monotonic() - t0
-    finally:
-        sys.setswitchinterval(saved)
-    assert not any(t.is_alive() for t in threads)
-    assert elapsed >= 79 / 200 * 0.95
 
 
 def test_config_pluggable_client_factory(spark):

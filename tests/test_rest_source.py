@@ -77,40 +77,6 @@ def test_indexed_paging_parallel_partitions(spark):
     assert df.count() == 57
 
 
-def test_indexed_paging_plans_partitions_from_total_count(spark):
-    opts = dict(FIXTURE_OPTS, transport_args="[57, 10, true]")
-    df = _read(spark, **opts, paging="indexed", max_pages="100")
-    # totalCount 57 in pages of 10 → 6 partitions, not max_pages
-    assert df.rdd.getNumPartitions() == 6
-    assert df.count() == 57
-
-
-def test_indexed_paging_without_total_count_plans_max_pages(spark):
-    df = _read(
-        spark,
-        transport_factory="tests.test_rest_source:indexed_transport_without_total",
-        transport_args="[57, 10]",
-        page_size="10",
-        paging="indexed",
-        max_pages="8",
-    )
-    assert df.rdd.getNumPartitions() == 8
-    assert df.count() == 57
-
-
-def indexed_transport_without_total(n_studies, page_size):
-    from ctgov_ai_etl_spark.fixtures import mock_ctgov_transport
-
-    inner = mock_ctgov_transport(n_studies, page_size, True)
-
-    def transport(params, page):
-        out = inner(params, page)
-        out.pop("totalCount", None)
-        return out
-
-    return transport
-
-
 def test_config_conjuncts_reach_params(spark):
     # the transport asserts on filter.advanced via a factory that
     # records params into the rows it serves
